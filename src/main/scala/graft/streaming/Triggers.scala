@@ -91,32 +91,31 @@ object Triggers {
       implicit accEnc: Encoder[ACC], outEnc: Encoder[Pane[K, OUT]])
       extends StatefulProcessor[(K, Long), (K, Long, V), Pane[K, OUT]] {
 
-    @transient private var acc: ValueState[ACC] = _
-    @transient private var paneIndex: ValueState[Int] = _
-    @transient private var sinceLastFire: ValueState[Long] = _
-    @transient private var timersSet: ValueState[Boolean] = _
-    @transient private var onTimeDone: ValueState[Boolean] = _
+    /** (acc, paneIndex, sinceLastFire, onTimeDone) in ONE record, read and
+      * written once per call: each state variable costs an encoder bind per
+      * partition per batch. The record and the window's timers are created
+      * on its first input and dropped at its final pane together, so "the
+      * record exists" means "the timers are registered". */
+    private type Rec = (ACC, Int, Long, Boolean)
+    @transient private var window: ValueState[Rec] = _
 
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      acc = getHandle.getValueState[ACC]("acc", accEnc, TTLConfig.NONE)
-      paneIndex = getHandle.getValueState[Int]("paneIndex", Encoders.scalaInt, TTLConfig.NONE)
-      sinceLastFire = getHandle.getValueState[Long]("sinceLastFire", Encoders.scalaLong, TTLConfig.NONE)
-      timersSet = getHandle.getValueState[Boolean]("timersSet", Encoders.scalaBoolean, TTLConfig.NONE)
-      onTimeDone = getHandle.getValueState[Boolean]("onTimeDone", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
+    override def init(om: OutputMode, tm: TimeMode): Unit =
+      window = getHandle.getValueState[Rec]("window",
+        Encoders.tuple(accEnc, Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaBoolean),
+        TTLConfig.NONE)
 
     private def windowEnd(wstart: Long): Long = windowEndOf(cfg, wstart)
     private def gcTime(wstart: Long): Long = windowEnd(wstart) + cfg.allowedLatenessMs
-    private def onTimeFired: Boolean = onTimeDone.exists() && onTimeDone.get()
+    private def fresh: Rec = (fn.createAccumulator(), 0, 0L, false)
+    private def load(): Option[Rec] = Option(window.get()) // null if absent: one read
 
-    private def fire(key: (K, Long), timing: String, isFinal: Boolean): Iterator[Pane[K, OUT]] = {
-      val idx = if (paneIndex.exists()) paneIndex.get() else 0
-      val a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      paneIndex.update(idx + 1)
-      sinceLastFire.update(0L)
-      if (timing == ON_TIME) onTimeDone.update(true)
-      if (!cfg.accumulating) acc.update(fn.createAccumulator()) // discarding: emit delta
-      Iterator((key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal))
+    /** The pane for `r` and the record after it fired. */
+    private def fire(key: (K, Long), r: Rec, timing: String,
+                     isFinal: Boolean): (Pane[K, OUT], Rec) = {
+      val (a, idx, _, onTimeDone) = r
+      val pane = (key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal)
+      val next = if (cfg.accumulating) a else fn.createAccumulator() // discarding: emit delta
+      (pane, (next, idx + 1, 0L, onTimeDone || timing == ON_TIME))
     }
 
     override def handleInputRows(key: (K, Long), rows: Iterator[(K, Long, V)],
@@ -126,67 +125,62 @@ object Triggers {
       // (reference: RCORE/LateDataDroppingDoFnRunner.java)
       if (wm >= gcTime(key._2)) return Iterator.empty
 
-      var a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      var n = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-      var count = 0L
-      rows.foreach { r => a = fn.addInput(a, r._3); count += 1 }
-      acc.update(a); n += count; sinceLastFire.update(n)
-
-      if (!(if (timersSet.exists()) timersSet.get() else false)) {
+      val prior = load()
+      if (prior.isEmpty) {
         getHandle.registerTimer(windowEnd(key._2))
         if (cfg.allowedLatenessMs > 0) getHandle.registerTimer(gcTime(key._2))
-        timersSet.update(true)
       }
+      val (a0, idx, n0, onTimeDone) = prior.getOrElse(fresh)
+      var a = a0
+      var count = 0L
+      rows.foreach { r => a = fn.addInput(a, r._3); count += 1 }
+      val n = n0 + count
+      val r = (a, idx, n, onTimeDone)
 
-      if (wm >= windowEnd(key._2)) {
-        // input after the watermark passed end-of-window. The FIRST
-        // post-watermark pane is the ON_TIME pane even when input and the
-        // end-of-window timer land in the same micro-batch (PaneInfo's
-        // ordering contract: ON_TIME precedes every LATE pane). This branch
-        // implies allowedLateness > 0 — with zero lateness gcTime ==
-        // windowEnd and the gate above already dropped the input — so a
-        // non-final pane is always correct here (the GC timer emits the
-        // final one).
-        if (cfg.lateFirings && count > 0)
-          fire(key, if (onTimeFired) LATE else ON_TIME, isFinal = false)
-        else Iterator.empty
-      } else cfg.early match {
-        case EveryBatch if count > 0          => fire(key, EARLY, isFinal = false)
-        case AfterCount(k) if n >= k          => fire(key, EARLY, isFinal = false)
-        case _                                => Iterator.empty
-      }
+      val fired =
+        if (wm >= windowEnd(key._2)) {
+          // input after the watermark passed end-of-window. The FIRST
+          // post-watermark pane is the ON_TIME pane even when input and the
+          // end-of-window timer land in the same micro-batch (PaneInfo's
+          // ordering contract: ON_TIME precedes every LATE pane). This branch
+          // implies allowedLateness > 0 — with zero lateness gcTime ==
+          // windowEnd and the gate above already dropped the input — so a
+          // non-final pane is always correct here (the GC timer emits the
+          // final one).
+          if (cfg.lateFirings && count > 0)
+            Some(fire(key, r, if (onTimeDone) LATE else ON_TIME, isFinal = false))
+          else None
+        } else cfg.early match {
+          case EveryBatch if count > 0   => Some(fire(key, r, EARLY, isFinal = false))
+          case AfterCount(k) if n >= k   => Some(fire(key, r, EARLY, isFinal = false))
+          case _                         => None
+        }
+      window.update(fired.fold(r)(_._2))
+      fired.iterator.map(_._1)
     }
 
     override def handleExpiredTimer(key: (K, Long), tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
-      val expiry = info.getExpiryTimeInMs()
-      if (expiry == windowEnd(key._2)) {
+      val r = load().getOrElse(fresh)
+      val (_, _, pending, onTimeDone) = r
+      if (info.getExpiryTimeInMs() == windowEnd(key._2)) {
         val isFinal = cfg.allowedLatenessMs == 0
-        val pending = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-        val out =
-          if (onTimeFired) {
+        val fired =
+          if (onTimeDone) {
             // the ON_TIME pane already went out with same-batch input;
             // the timer only flushes data that arrived since
-            if (pending > 0) fire(key, LATE, isFinal) else Iterator.empty[Pane[K, OUT]]
-          } else if (cfg.onTimeAlways || pending > 0) fire(key, ON_TIME, isFinal)
-          else Iterator.empty[Pane[K, OUT]]
-        if (isFinal) clearAll()
-        out
+            if (pending > 0) Some(fire(key, r, LATE, isFinal)) else None
+          } else if (cfg.onTimeAlways || pending > 0) Some(fire(key, r, ON_TIME, isFinal))
+          else None
+        if (isFinal) window.clear() else fired.foreach(f => window.update(f._2))
+        fired.iterator.map(_._1)
       } else {
         // GC timer: final pane only if data arrived since the last firing
         // (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105)
-        val pending = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-        val out =
-          if (pending > 0) fire(key, LATE, isFinal = true)
-          else Iterator.empty[Pane[K, OUT]]
-        clearAll()
-        out
+        window.clear()
+        if (pending > 0) Iterator(fire(key, r, LATE, isFinal = true)._1)
+        else Iterator.empty
       }
-    }
-
-    private def clearAll(): Unit = {
-      acc.clear(); paneIndex.clear(); sinceLastFire.clear(); timersSet.clear()
-      onTimeDone.clear()
     }
   }
 
@@ -526,9 +520,11 @@ object Triggers {
     private def windowEnd(ws: Long) = ws + windowSizeMs
     private def gcTime(ws: Long) = windowEnd(ws) + allowedLatenessMs
 
+    /** One read per input group or timer (`get()` is null when absent); the
+      * map is passed through. A stored state always holds the root path. */
     private def loadTrig(): TrigState = {
       val m = collection.mutable.Map.empty[String, (Long, Boolean, Long)]
-      if (trigState.exists()) trigState.get().foreach { case (p, c, f, d) => m(p) = (c, f, d) }
+      Option(trigState.get()).foreach(_.foreach { case (p, c, f, d) => m(p) = (c, f, d) })
       m
     }
     private def saveTrig(st: TrigState): Unit =
@@ -548,8 +544,8 @@ object Triggers {
       * handler re-registers. Cost: one timer wake per armed key per
       * watermark advance, the same cadence Beam's proc-time timers exhibit
       * under a micro-batch runner. */
-    private def armCatchupTimer(key: (K, Long), wm: Long): Unit =
-      if (trigState.exists() && armedDeadline(loadTrig()) && wm + 1 < windowEnd(key._2))
+    private def armCatchupTimer(key: (K, Long), wm: Long, st: TrigState): Unit =
+      if (armedDeadline(st) && wm + 1 < windowEnd(key._2))
         getHandle.registerTimer(wm + 1)
 
     private def fire(key: (K, Long), wmPastEnd: Boolean, isFinal: Boolean): Pane[K, OUT] = {
@@ -565,8 +561,9 @@ object Triggers {
       (key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal)
     }
 
-    private def evalAndFire(key: (K, Long), wm: Long, nowProcMs: Long): Iterator[Pane[K, OUT]] = {
-      val st = loadTrig()
+    /** Fires at most one pane, then saves `st` or (root finished) clears it. */
+    private def evalAndFire(key: (K, Long), wm: Long, nowProcMs: Long,
+                            st: TrigState): Iterator[Pane[K, OUT]] = {
       val wmPastEnd = wm >= windowEnd(key._2)
       val ctx = TrigCtx(wmPastEnd, nowProcMs)
       var out = List.empty[Pane[K, OUT]]
@@ -581,6 +578,7 @@ object Triggers {
           // fresh accumulator and emit a second "final" pane
           clearAll()
           closed.update(true)
+          st.clear() // a closed window arms no catch-up timer
           return out.reverseIterator
         }
       }
@@ -600,14 +598,13 @@ object Triggers {
       sinceFire.update((if (sinceFire.exists()) sinceFire.get() else 0L) + n)
       val st = loadTrig()
       TriggerEval.addElements(trigger, "r", st, n, tv.getCurrentProcessingTimeInMs())
-      saveTrig(st)
       if (!(if (timersSet.exists()) timersSet.get() else false)) {
         getHandle.registerTimer(windowEnd(key._2))
         getHandle.registerTimer(gcTime(key._2))
         timersSet.update(true)
       }
-      val out = evalAndFire(key, wm, tv.getCurrentProcessingTimeInMs())
-      armCatchupTimer(key, wm)
+      val out = evalAndFire(key, wm, tv.getCurrentProcessingTimeInMs(), st)
+      armCatchupTimer(key, wm, st)
       out
     }
 
@@ -618,7 +615,8 @@ object Triggers {
         if (info.getExpiryTimeInMs() >= gcTime(key._2)) closed.clear()
         return Iterator.empty
       }
-      if (!acc.exists() && !trigState.exists()) return Iterator.empty // already gone
+      val st = loadTrig()
+      if (st.isEmpty && !acc.exists()) return Iterator.empty // already gone
       // GC first: with allowedLateness=0 the end-of-window timer IS the GC
       // timer (same timestamp, Spark dedups) — window expiry wins
       if (info.getExpiryTimeInMs() >= gcTime(key._2)) {
@@ -629,7 +627,6 @@ object Triggers {
         //  - data arrived since the last firing
         //    (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105), or
         //  - no pane ever fired (every window produces at least one pane).
-        val st = loadTrig()
         val onTime = onTimeDone.exists() && onTimeDone.get()
         val trigWants = !onTime && TriggerEval.shouldFire(trigger, "r", st,
           TrigCtx(wmPastEnd = true, tv.getCurrentProcessingTimeInMs()))
@@ -650,8 +647,8 @@ object Triggers {
         val wmEff =
           if (expiry >= windowEnd(key._2)) windowEnd(key._2)
           else math.min(wmNow, windowEnd(key._2) - 1)
-        val out = evalAndFire(key, wm = wmEff, tv.getCurrentProcessingTimeInMs())
-        if (expiry < windowEnd(key._2)) armCatchupTimer(key, wmNow)
+        val out = evalAndFire(key, wm = wmEff, tv.getCurrentProcessingTimeInMs(), st)
+        if (expiry < windowEnd(key._2)) armCatchupTimer(key, wmNow, st)
         out
       }
     }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig, ValueState}
 
+import graft.functions.CombineFn
 import graft.operators.Windows.{FixedWindows, WindowingStrategy}
-import graft.streaming.{AsOfStream, Stateful, StreamingOps}
+import graft.streaming.{AsOfStream, Stateful, StreamingOps, Triggers}
 
 /** Checkpoint-recovery scenarios: stop a stateful streaming query
   * mid-stream and restart it from the SAME checkpoint — accumulated state
@@ -127,6 +128,66 @@ class CheckpointRecoverySpec extends SparkSpec {
             s"batch ${expected.toSeq.sortBy(t => (t._1, t._2))}")
       } finally q.stop()
     }
+  }
+
+  test("trigger engine: pane index, ON_TIME and final panes continue across a restart") {
+    val sumFn = new CombineFn[Long, Long, Long] {
+      def createAccumulator(): Long = 0L
+      def addInput(acc: Long, in: Long): Long = acc + in
+      def mergeAccumulators(a: Long, b: Long): Long = a + b
+      def extractOutput(acc: Long): Long = acc
+    }
+    val input = MemoryStream[(String, Timestamp, Long)](spark)
+    val assigned = Triggers.assignFixedWindows(
+      input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
+        .as[(String, Timestamp, Long)], 60000L)
+    // early pane per batch, late input absorbed (no LATE refinements) so the
+    // GC timer owns the final pane, which is then distinct from ON_TIME
+    val panes = Triggers.triggeredAggregate(assigned, sumFn, Triggers.TriggerConfig(
+      windowSizeMs = 60000L, allowedLatenessMs = 120000L,
+      early = Triggers.EveryBatch, lateFirings = false))
+      .toDF("k", "ws", "we", "value", "idx", "timing", "is_final")
+    val cp = ckpt()
+    val outDir = Files.createTempDirectory("graft-rec-out").toString
+    def aPanes = spark.read.schema(
+      "k STRING, ws LONG, we LONG, value LONG, idx INT, timing STRING, is_final BOOLEAN")
+      .parquet(outDir).collect().filter(_.getString(0) == "a")
+      .map(r => (r.getInt(4), r.getString(5), r.getLong(3), r.getBoolean(6)))
+      .sortBy(_._1).toSeq
+
+    // run 1: unlike the scenarios above, a pane DOES go out before the stop
+    // (EARLY, index 0) — the recovered state must continue after it
+    val q1 = restartable(panes, outDir, cp).start()
+    try {
+      input.addData(("a", ts(10000), 3L), ("a", ts(20000), 4L))
+      q1.processAllAvailable()
+      assert(aPanes == Seq((0, "EARLY", 7L, false)), s"pre-stop panes: $aPanes")
+    } finally q1.stop()
+
+    // run 2: another early pane, the watermark passes the window end
+    // (ON_TIME), a late element inside allowedLateness is absorbed, the
+    // watermark passes the GC horizon (final pane), and an element beyond
+    // it is dropped
+    val q2 = restartable(panes, outDir, cp).start()
+    try {
+      input.addData(("a", ts(30000), 5L))
+      q2.processAllAvailable()
+      input.addData(("b", ts(90000), 0L))
+      q2.processAllAvailable()
+      input.addData(("a", ts(40000), 6L))
+      q2.processAllAvailable()
+      input.addData(("b", ts(600000), 0L))
+      q2.processAllAvailable()
+      input.addData(("a", ts(50000), 100L), ("b", ts(900000), 0L))
+      q2.processAllAvailable()
+      val got = aPanes
+      assert(got.map(_._1) == (0 until got.size), s"pane indices have a gap: $got")
+      assert(got.count(_._2 == "ON_TIME") == 1 && got.count(_._4) == 1,
+        s"one ON_TIME pane and one final pane: $got")
+      assert(got == Seq((0, "EARLY", 7L, false), (1, "EARLY", 12L, false),
+        (2, "ON_TIME", 12L, false), (3, "LATE", 3L + 4 + 5 + 6, true)),
+        s"panes across the restart: $got")
+    } finally q2.stop()
   }
 
   test("stateful ParDo: an event-time timer registered before the stop fires after restart") {

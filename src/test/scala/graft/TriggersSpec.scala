@@ -72,6 +72,24 @@ class TriggersSpec extends SparkSpec {
     assert(aPanes.size == 2, s"too-late element must not produce a pane: $panes")
   }
 
+  test("state rows: an open window holds ONE value row; its timers add none") {
+    // One input batch into one (key, window) with allowedLateness > 0 and
+    // an EARLY firing leaves the window open with its end-of-window and GC
+    // timers registered. numRowsTotal counts the pane record (one
+    // ValueState row) and, measured on Spark 4.1.2, 0 rows for the timers.
+    // One state variable per field would hold 4 value rows here (acc,
+    // paneIndex, sinceLastFire, timersSet).
+    var rows = -1L
+    runScenario(TriggerConfig(windowSizeMs = 60000L, allowedLatenessMs = 120000L,
+      early = EveryBatch), "trig_state_rows") { (input, q) =>
+      input.addData(("a", ts("2024-01-01 10:00:10"), 1L), ("a", ts("2024-01-01 10:00:20"), 1L))
+      q.processAllAvailable()
+      rows = q.lastProgress.stateOperators.head.numRowsTotal
+    }
+    assert(rows == 1L,
+      s"numRowsTotal = $rows; expected 1 value row + 0 counted timer rows")
+  }
+
   test("early firings every batch + discarding mode emit per-pane deltas") {
     val panes = runScenario(TriggerConfig(
       windowSizeMs = 60000L, allowedLatenessMs = 0L,
