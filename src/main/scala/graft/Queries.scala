@@ -1738,18 +1738,20 @@ object Queries {
     * than filtered — the synthetic totals cluster near the mean (no robots
     * planted), and an all-but-empty filtered set would verify almost
     * nothing, while this shape oracle-checks every total and every flag.
-    * The singleton view collects ONE row — Beam's own side-input contract,
-    * not a hot-path collect; at 100 TB the plan is two map-side-combined
-    * hash aggregates and a codegen'd projection, no join. */
+    * The singleton side input is the one-row total, broadcast into a
+    * cross join inside the plan rather than collected while the query is
+    * built: building starts no Spark job, and AQE reuses the per-user
+    * aggregate's exchange for both consumers instead of scanning `events`
+    * twice. */
   def qSpammyUsers(s: SparkSession, dir: String): DataFrame = {
     val sums = t(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(sum(cents(col("value"))).as("total_cents"))
-    val (sumAll, nUsers) = Joins.viewAsSingleton[(Long, Long)](s,
-      sums.agg(sum(col("total_cents")), count(lit(1))),
-      r => (r.getLong(0), r.getLong(1))).value
-    sums.select(col("user_id"), col("total_cents"),
-      (col("total_cents") * lit(nUsers) * lit(10L) > lit(25L * sumAll)).as("is_spammy"))
+    val total = sums.agg(sum(col("total_cents")).as("sum_all"), count(lit(1)).as("n_users"))
+    sums.crossJoin(broadcast(total))
+      .select(col("user_id"), col("total_cents"),
+        (col("total_cents") * col("n_users") * lit(10L) > lit(25L) * col("sum_all"))
+          .as("is_spammy"))
   }
 
   /** Deterministic training shuffle: the corpus's reproducible random

@@ -20,6 +20,13 @@ import org.apache.spark.sql.streaming._
   * Beam scopes user state per (key, window); here state is per key — the
   * per-window scoping is recovered by keying on (userKey, window) when
   * windowed state is needed (see Triggers).
+  *
+  * One processor does not run on transformWithState: the fixed-window
+  * pane step (`Triggers.triggeredAggregate`) keeps one record and one
+  * pending timeout per (key, window), which is flatMapGroupsWithState's
+  * EventTimeTimeout shape. There the timeout lives in the state row, and
+  * the step pays none of transformWithState's per-partition, per-batch
+  * timer set-up, timer column families or per-timer encoder projections.
   */
 object Stateful {
 

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.functions.{col, lit, timestamp_millis, udf}
 import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.functions.CombineFn
 import graft.operators.Windows
@@ -24,9 +28,11 @@ import graft.operators.Windows
   * Execution shape: elements are window-assigned up front (Beam assigns
   * windows eagerly too — WindowedValue carries them), then keyed by
   * (userKey, windowStart) so per-(key, window) state matches Beam's state
-  * namespaces (RCORE/StateNamespaces.java). Two event-time timers per
+  * namespaces (RCORE/StateNamespaces.java). Two event-time steps per
   * window: end-of-window (ON_TIME firing) and end + allowedLateness (final
-  * firing + state GC).
+  * firing + state GC). The fixed-window processor keeps one timeout that
+  * moves from the first to the second; the composite and session
+  * processors register a timer for each.
   */
 object Triggers {
 
@@ -85,116 +91,159 @@ object Triggers {
 
   private val ON_TIME = "ON_TIME"; private val EARLY = "EARLY"; private val LATE = "LATE"
 
-  /** The ReduceFnRunner analogue for one (key, window). */
-  private class TriggerProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)(
-      implicit accEnc: Encoder[ACC], outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[(K, Long), (K, Long, V), Pane[K, OUT]] {
+  /** The ReduceFnRunner analogue for one (key, window), as a
+    * flatMapGroupsWithState step under EventTimeTimeout: one state row per
+    * (key, window) that carries both the pane record and the window's one
+    * pending timeout. The composite and session processors below run on
+    * transformWithState instead, because they need several timers and
+    * MapState per key; this one needs neither, and transformWithState's
+    * timer index, timer column families and per-call encoder projections
+    * cost every partition every micro-batch whether or not a timer is due.
+    *
+    * Timer rule: a transformWithState timer at T fires once the watermark
+    * REACHES T, a GroupState timeout at ts once the watermark PASSES ts
+    * (TimerTieProbeSpec pins both), so the step arms T - 1. The timeout is
+    * window end while the end-of-window step is pending and the GC horizon
+    * after it. A group that gets input is not timed out in the same batch,
+    * and the timeout must be at or after the current watermark, so the
+    * input call itself runs any step that is already due, straight after
+    * the input — where the timers of a transformWithState port fired.
+    *
+    * The trade: Spark finds due timeouts by scanning every state row of a
+    * partition each batch, where transformWithState reads a timer index, so
+    * that part of the per-batch cost grows with the open windows rather
+    * than with the due ones. */
+  private final class PaneStep[K, V, ACC, OUT](fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)
+      extends Serializable {
 
-    /** (acc, paneIndex, sinceLastFire, onTimeDone) in ONE record, read and
-      * written once per call: each state variable costs an encoder bind per
-      * partition per batch. The record and the window's timers are created
-      * on its first input and dropped at its final pane together, so "the
-      * record exists" means "the timers are registered". */
-    private type Rec = (ACC, Int, Long, Boolean)
-    @transient private var window: ValueState[Rec] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      window = getHandle.getValueState[Rec]("window",
-        Encoders.tuple(accEnc, Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaBoolean),
-        TTLConfig.NONE)
+    /** (acc, paneIndex, sinceLastFire, onTimeDone, endDone): read once and
+      * written or removed once per call. */
+    type Rec = (ACC, Int, Long, Boolean, Boolean)
 
     private def windowEnd(wstart: Long): Long = windowEndOf(cfg, wstart)
-    private def gcTime(wstart: Long): Long = windowEnd(wstart) + cfg.allowedLatenessMs
-    private def fresh: Rec = (fn.createAccumulator(), 0, 0L, false)
-    private def load(): Option[Rec] = Option(window.get()) // null if absent: one read
+    private def fresh: Rec = (fn.createAccumulator(), 0, 0L, false, false)
 
     /** The pane for `r` and the record after it fired. */
     private def fire(key: (K, Long), r: Rec, timing: String,
                      isFinal: Boolean): (Pane[K, OUT], Rec) = {
-      val (a, idx, _, onTimeDone) = r
+      val (a, idx, _, onTimeDone, endDone) = r
       val pane = (key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal)
       val next = if (cfg.accumulating) a else fn.createAccumulator() // discarding: emit delta
-      (pane, (next, idx + 1, 0L, onTimeDone || timing == ON_TIME))
+      (pane, (next, idx + 1, 0L, onTimeDone || timing == ON_TIME, endDone))
     }
 
-    override def handleInputRows(key: (K, Long), rows: Iterator[(K, Long, V)],
-                                 tv: TimerValues): Iterator[Pane[K, OUT]] = {
-      val wm = tv.getCurrentWatermarkInMs()
+    def apply(key: (K, Long), rows: Iterator[(K, Long, V, java.sql.Timestamp)],
+              state: GroupState[Rec]): Iterator[Pane[K, OUT]] = {
+      val wm = state.getCurrentWatermarkMs()
+      val end = windowEnd(key._2)
+      val gc = end + cfg.allowedLatenessMs
       // too-late data: beyond GC horizon → dropped
-      // (reference: RCORE/LateDataDroppingDoFnRunner.java)
-      if (wm >= gcTime(key._2)) return Iterator.empty
+      // (reference: RCORE/LateDataDroppingDoFnRunner.java). Spark's own
+      // late-row filter on the __gc column drops a subset of these: it
+      // compares with the previous batch's watermark.
+      val admitted = !state.hasTimedOut && wm < gc
+      if (!admitted && !state.exists) return Iterator.empty
 
-      val prior = load()
-      if (prior.isEmpty) {
-        getHandle.registerTimer(windowEnd(key._2))
-        if (cfg.allowedLatenessMs > 0) getHandle.registerTimer(gcTime(key._2))
+      val out = Vector.newBuilder[Pane[K, OUT]]
+      var r = state.getOption.getOrElse(fresh)
+      if (admitted) {
+        val (a0, idx, n0, onTimeDone, endDone) = r
+        var a = a0
+        var count = 0L
+        rows.foreach { row => a = fn.addInput(a, row._3); count += 1 }
+        val n = n0 + count
+        r = (a, idx, n, onTimeDone, endDone)
+        val fired =
+          if (wm >= end) {
+            // input after the watermark passed end-of-window. The FIRST
+            // post-watermark pane is the ON_TIME pane even when input and
+            // the end-of-window step land in the same micro-batch (PaneInfo's
+            // ordering contract: ON_TIME precedes every LATE pane). This
+            // branch implies allowedLateness > 0 — with zero lateness gc ==
+            // end and the gate above already dropped the input — so a
+            // non-final pane is always correct here (the GC step emits the
+            // final one).
+            if (cfg.lateFirings && count > 0)
+              Some(fire(key, r, if (onTimeDone) LATE else ON_TIME, isFinal = false))
+            else None
+          } else cfg.early match {
+            case EveryBatch if count > 0 => Some(fire(key, r, EARLY, isFinal = false))
+            case AfterCount(k) if n >= k => Some(fire(key, r, EARLY, isFinal = false))
+            case _                       => None
+          }
+        fired.foreach { case (p, next) => out += p; r = next }
       }
-      val (a0, idx, n0, onTimeDone) = prior.getOrElse(fresh)
-      var a = a0
-      var count = 0L
-      rows.foreach { r => a = fn.addInput(a, r._3); count += 1 }
-      val n = n0 + count
-      val r = (a, idx, n, onTimeDone)
 
-      val fired =
-        if (wm >= windowEnd(key._2)) {
-          // input after the watermark passed end-of-window. The FIRST
-          // post-watermark pane is the ON_TIME pane even when input and the
-          // end-of-window timer land in the same micro-batch (PaneInfo's
-          // ordering contract: ON_TIME precedes every LATE pane). This branch
-          // implies allowedLateness > 0 — with zero lateness gcTime ==
-          // windowEnd and the gate above already dropped the input — so a
-          // non-final pane is always correct here (the GC timer emits the
-          // final one).
-          if (cfg.lateFirings && count > 0)
-            Some(fire(key, r, if (onTimeDone) LATE else ON_TIME, isFinal = false))
-          else None
-        } else cfg.early match {
-          case EveryBatch if count > 0   => Some(fire(key, r, EARLY, isFinal = false))
-          case AfterCount(k) if n >= k   => Some(fire(key, r, EARLY, isFinal = false))
-          case _                         => None
-        }
-      window.update(fired.fold(r)(_._2))
-      fired.iterator.map(_._1)
-    }
-
-    override def handleExpiredTimer(key: (K, Long), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
-      val r = load().getOrElse(fresh)
-      val (_, _, pending, onTimeDone) = r
-      if (info.getExpiryTimeInMs() == windowEnd(key._2)) {
+      if (!r._5 && wm >= end) { // end-of-window step, once
+        val (_, _, pending, onTimeDone, _) = r
         val isFinal = cfg.allowedLatenessMs == 0
         val fired =
           if (onTimeDone) {
-            // the ON_TIME pane already went out with same-batch input;
-            // the timer only flushes data that arrived since
+            // the ON_TIME pane already went out with input; the step only
+            // flushes data that arrived since
             if (pending > 0) Some(fire(key, r, LATE, isFinal)) else None
           } else if (cfg.onTimeAlways || pending > 0) Some(fire(key, r, ON_TIME, isFinal))
           else None
-        if (isFinal) window.clear() else fired.foreach(f => window.update(f._2))
-        fired.iterator.map(_._1)
-      } else {
-        // GC timer: final pane only if data arrived since the last firing
-        // (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105)
-        window.clear()
-        if (pending > 0) Iterator(fire(key, r, LATE, isFinal = true)._1)
-        else Iterator.empty
+        fired.foreach { case (p, next) => out += p; r = next }
+        r = r.copy(_5 = true)
       }
+
+      if (wm >= gc) {
+        // GC step: final pane only if data arrived since the last firing
+        // (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105);
+        // with zero lateness it follows the final end step, which left
+        // nothing pending
+        if (r._3 > 0) out += fire(key, r, LATE, isFinal = true)._1
+        state.remove()
+      } else {
+        state.update(r)
+        state.setTimeoutTimestamp((if (r._5) gc else end) - 1)
+      }
+      out.result().iterator
     }
   }
 
   /** Triggered fixed-window aggregation with pane metadata. `assigned` must
     * be (key, windowStartMs, value) with a watermark declared upstream
-    * (use [[assignFixedWindows]]). */
+    * (use [[assignFixedWindows]]).
+    *
+    * EventTimeTimeout needs an input column that carries event-time
+    * watermark metadata, and the typed map that assigns windows drops it.
+    * So an internal `__gc` column (window end + allowedLateness) is marked
+    * with the watermark key: Spark's late-row filter then drops only rows
+    * the step's own `wm >= gc` gate drops too. The mark is metadata only;
+    * a second `withWatermark` would take part in the query's global
+    * watermark. The filter reads the first marked column, so a field of
+    * `assigned` that kept a mark of its own still decides, as it did under
+    * transformWithState. */
   def triggeredAggregate[K, V, ACC, OUT](
       assigned: Dataset[(K, Long, V)], fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)(
       implicit kEnc: Encoder[(K, Long)], accEnc: Encoder[ACC],
       outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
+    // not needed by flatMapGroupsWithState, but the session-wide provider
+    // stays the one the composite and session processors need
     Stateful.requireRocksDBStateStore(assigned.sparkSession)
-    assigned.groupByKey(r => (r._1, r._2))
-      .transformWithState(new TriggerProcessor[K, V, ACC, OUT](fn, cfg),
-        TimeMode.EventTime(), OutputMode.Append())
+    val fields = AgnosticEncoders.agnosticEncoderFor(assigned.encoder) match {
+      case p: AgnosticEncoders.ProductEncoder[_] => p.fields.map(_.enc)
+      case e => throw new IllegalArgumentException(s"triggeredAggregate: not a tuple encoder: $e")
+    }
+    val withGcEnc = Encoders.tuple(fields(0).asInstanceOf[Encoder[K]], Encoders.scalaLong,
+      fields(2).asInstanceOf[Encoder[V]], Encoders.TIMESTAMP)
+    val gcMs = cfg.calendar match {
+      case None => col("_2") + lit(cfg.windowSizeMs + cfg.allowedLatenessMs)
+      case Some(cw) =>
+        val lateness = cfg.allowedLatenessMs
+        udf((ws: Long) => Windows.calendarWindowEndMs(cw, ws) + lateness).apply(col("_2"))
+    }
+    val watermarked = new MetadataBuilder().putLong(EventTimeWatermark.delayKey, 0L).build()
+    val withGc = assigned.toDF("_1", "_2", "_3")
+      .select(col("*"), timestamp_millis(gcMs).as("__gc", watermarked))
+      .as(withGcEnc)
+    val step = new PaneStep[K, V, ACC, OUT](fn, cfg)
+    withGc.groupByKey(r => (r._1, r._2))
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(step.apply)(
+        Encoders.tuple(accEnc, Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaBoolean,
+          Encoders.scalaBoolean), outEnc)
   }
 
   /** Fixed-window assignment (FixedWindows.java:36): wstart =

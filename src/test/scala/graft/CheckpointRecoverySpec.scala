@@ -37,6 +37,13 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   private def ts(ms: Long) = new Timestamp(ms)
 
+  private val sumFn = new CombineFn[Long, Long, Long] {
+    def createAccumulator(): Long = 0L
+    def addInput(acc: Long, in: Long): Long = acc + in
+    def mergeAccumulators(a: Long, b: Long): Long = a + b
+    def extractOutput(acc: Long): Long = acc
+  }
+
   private def restartable(df: DataFrame, outDir: String, cp: String) =
     df.writeStream.format("parquet").option("path", outDir)
       .option("checkpointLocation", cp).outputMode("append")
@@ -131,12 +138,6 @@ class CheckpointRecoverySpec extends SparkSpec {
   }
 
   test("trigger engine: pane index, ON_TIME and final panes continue across a restart") {
-    val sumFn = new CombineFn[Long, Long, Long] {
-      def createAccumulator(): Long = 0L
-      def addInput(acc: Long, in: Long): Long = acc + in
-      def mergeAccumulators(a: Long, b: Long): Long = a + b
-      def extractOutput(acc: Long): Long = acc
-    }
     val input = MemoryStream[(String, Timestamp, Long)](spark)
     val assigned = Triggers.assignFixedWindows(
       input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
@@ -188,6 +189,47 @@ class CheckpointRecoverySpec extends SparkSpec {
         (2, "ON_TIME", 12L, false), (3, "LATE", 3L + 4 + 5 + 6, true)),
         s"panes across the restart: $got")
     } finally q2.stop()
+  }
+
+  test("trigger engine: a checkpoint written by the transformWithState port fails loudly on restart") {
+    // Spark 4.1.2 checks the checkpoint's operator metadata against the
+    // restarted plan: the transformWithState port of triggeredAggregate
+    // left a transformWithStateExec operator, the current build plans
+    // flatMapGroupsWithState, and the query stops with an error instead
+    // of restarting on state it cannot read. If a Spark upgrade drops that
+    // check, this fails first: the restart would silently lose the
+    // window's pre-restart input.
+    val input = MemoryStream[(String, Timestamp, Long)](spark)
+    val assigned = Triggers.assignFixedWindows(
+      input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
+        .as[(String, Timestamp, Long)], 60000L)
+    val cfg = Triggers.TriggerConfig(windowSizeMs = 60000L, allowedLatenessMs = 120000L,
+      early = Triggers.EveryBatch)
+    val cols = Seq("k", "ws", "we", "value", "idx", "timing", "is_final")
+    val cp = ckpt()
+    val outDir = Files.createTempDirectory("graft-rec-out").toString
+    def panes = spark.read.schema(
+      "k STRING, ws LONG, we LONG, value LONG, idx INT, timing STRING, is_final BOOLEAN")
+      .parquet(outDir).collect().map(r => (r.getInt(4), r.getString(5), r.getLong(3))).toSeq
+
+    val old = restartable(graft.streaming.TwsTriggerReference.triggeredAggregate(
+      assigned, sumFn, cfg).toDF(cols: _*), outDir, cp).start()
+    try {
+      input.addData(("a", ts(10000), 3L), ("a", ts(20000), 4L))
+      old.processAllAvailable()
+    } finally old.stop()
+    assert(panes == Seq((0, "EARLY", 7L)), s"pre-stop panes: $panes")
+
+    val q = restartable(Triggers.triggeredAggregate(assigned, sumFn, cfg).toDF(cols: _*),
+      outDir, cp).start()
+    val err = try {
+      input.addData(("a", ts(30000), 5L))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    } finally q.stop()
+    assert(err.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA") &&
+      err.getMessage.contains("transformWithStateExec") &&
+      err.getMessage.contains("flatMapGroupsWithState"), err.getMessage.take(600))
+    assert(panes == Seq((0, "EARLY", 7L)), s"no pane may be written after the failed restart: $panes")
   }
 
   test("stateful ParDo: an event-time timer registered before the stop fires after restart") {

@@ -45,29 +45,7 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
   private val Trials = sys.env.getOrElse("SPARK_GRAFT_TRIGFUZZ_N", "5").toInt
   private val WindowMs = 10000L
 
-  import TriggerSim.{genAst, build, Sim}
-
-  sealed private trait Step
-  private case class In(ts: Seq[Long]) extends Step // seconds
-  private case class Wm(t: Long) extends Step
-
-  private def genSchedule(rnd: scala.util.Random): (Seq[Step], Long) = {
-    val latenessSec = Seq(0L, 15L, 1000L)(rnd.nextInt(3))
-    val steps = Seq.newBuilder[Step]
-    var wmSoFar = 0L
-    for (_ <- 0 until 6 + rnd.nextInt(5)) {
-      if (rnd.nextInt(10) < 7) {
-        // element ts 1..45s over ~4 windows; below-watermark (late) ts stay
-        // in — the engine admits them and the late/GC paths must agree
-        steps += In(Seq.fill(1 + rnd.nextInt(3))(1L + rnd.nextInt(45)))
-      } else {
-        wmSoFar += rnd.nextInt(20) // nondecreasing; exact window-end ties allowed
-        steps += Wm(wmSoFar)
-      }
-    }
-    steps += Wm(3000L) // past every GC horizon: flush/GC everything
-    (steps.result(), latenessSec)
-  }
+  import TriggerSim.{genAst, build, genSchedule, In, Sim, Step, Wm}
 
   private type PaneT = (Long, Int, String, Boolean, Seq[Long])
 

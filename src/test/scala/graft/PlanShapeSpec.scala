@@ -385,6 +385,29 @@ class PlanShapeSpec extends SparkSpec {
       s"singleton side input must broadcast:\n${p.take(2500)}")
   }
 
+  test("q_spammy_users: building starts no Spark job; the one-row total broadcasts " +
+      "and the per-user aggregate's exchange is reused") {
+    GraftSession.table(spark, dir, "events") // the memoized schema read is not the query's
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val df = try {
+      val built = SparkEntry.queries("q_spammy_users")(spark, dir)
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      built
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0, s"building q_spammy_users started ${jobs.get} Spark job(s)")
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(2500))
+    df.collect()
+    val done = df.queryExecution.executedPlan.toString
+    assert(done.contains("ReusedExchange"), s"events scanned twice:\n${done.take(4000)}")
+  }
+
   test("domain-mix apply: the epoch-rate table joins as a BROADCAST; the corpus never " +
        "shuffles and no window appears") {
     // Mixing.applyPlan's 100 TB claim: the only join is corpus ⋈ broadcast

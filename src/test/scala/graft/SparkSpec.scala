@@ -14,6 +14,15 @@ trait SparkSpec extends AnyFunSuite {
   def assertRows(df: org.apache.spark.sql.DataFrame, expected: Seq[Seq[Any]]): Unit =
     graft.testing.PAssert.containsInAnyOrder(df, expected)
 
+  /** A session of its own with no-data micro-batches on or off. With them
+    * off, every micro-batch reads data: one `addData`, one batch, and
+    * timers fire only in batches that read data. */
+  def sessionWithNoDataBatches(enabled: Boolean): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", enabled.toString)
+    s
+  }
+
   /** Fresh streaming-checkpoint dir (shared by every streaming suite). */
   def ckpt(): String =
     java.nio.file.Files.createTempDirectory("graft-ckpt").toString

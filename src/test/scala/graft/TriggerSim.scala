@@ -18,6 +18,34 @@ import graft.streaming.Triggers._
   */
 object TriggerSim {
 
+  /** One micro-batch of a fuzz schedule: elements at `ts` seconds, or a
+    * watermark-only event at `t` seconds. */
+  sealed trait Step
+  final case class In(ts: Seq[Long]) extends Step
+  final case class Wm(t: Long) extends Step
+
+  /** A random fixed-window schedule and its allowed lateness in seconds
+    * (0, 15 or 1000): element ts 1..45 s over ~4 windows of 10 s,
+    * late elements included, nondecreasing watermark steps with exact
+    * window-end ties allowed, and a last step past every GC horizon. */
+  def genSchedule(rnd: scala.util.Random): (Seq[Step], Long) = {
+    val latenessSec = Seq(0L, 15L, 1000L)(rnd.nextInt(3))
+    val steps = Seq.newBuilder[Step]
+    var wmSoFar = 0L
+    for (_ <- 0 until 6 + rnd.nextInt(5)) {
+      if (rnd.nextInt(10) < 7) {
+        // below-watermark (late) ts stay in — the engine admits them and
+        // the late/GC paths must agree
+        steps += In(Seq.fill(1 + rnd.nextInt(3))(1L + rnd.nextInt(45)))
+      } else {
+        wmSoFar += rnd.nextInt(20) // nondecreasing; exact window-end ties allowed
+        steps += Wm(wmSoFar)
+      }
+    }
+    steps += Wm(3000L) // past every GC horizon: flush/GC everything
+    (steps.result(), latenessSec)
+  }
+
   sealed trait Sim {
     var fin = false
     def add(n: Long): Unit
