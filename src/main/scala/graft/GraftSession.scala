@@ -16,6 +16,25 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Scale notes: shuffle partitions default to the local core count (the
   * driver harness runs local[32]); on a real cluster AQE coalesces and
   * re-splits at runtime, so we enable it unconditionally.
+  *
+  * State store provider: the session sets none, so each stateful operator
+  * family gets the store it needs.
+  *  - flatMapGroupsWithState (the fixed-window trigger engine,
+  *    `Triggers.triggeredAggregate`), streaming dedup and Spark's built-in
+  *    stateful operators run on Spark's default, the HDFS-backed provider:
+  *    one key-value map per partition, no column families needed, and a
+  *    per-batch commit that only writes a delta file. It keeps every state
+  *    row on the heap; a stream whose state approaches the heap sets
+  *    `spark.sql.streaming.stateStore.providerClass` to RocksDB itself
+  *    before its first start.
+  *  - transformWithState (stateful ParDo, GroupIntoBatches, the composite
+  *    and session trigger processors, the streaming as-of joins) needs
+  *    column families, which only RocksDB has: each of those builders calls
+  *    `Stateful.requireRocksDBStateStore`.
+  *  - batch transformWithState builds a RocksDB store whatever the conf
+  *    says, so no catalog query depends on it.
+  * A query keeps the provider it first started with: the checkpoint's
+  * offset log records it and a restart reads it back from there.
   */
 object GraftSession {
 
@@ -61,10 +80,6 @@ object GraftSession {
       .config("spark.cleaner.periodicGC.interval", "2min")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // transformWithState (stateful ParDo / trigger engine) needs a state
-      // store with column families — RocksDB, bundled with Spark.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // Catalyst extensions (a NO-OP unless spark.graft.* confs enable a
       // rule — see graft.plans.GraftExtensions)
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)

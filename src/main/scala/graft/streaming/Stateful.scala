@@ -27,12 +27,26 @@ import org.apache.spark.sql.streaming._
   * EventTimeTimeout shape. There the timeout lives in the state row, and
   * the step pays none of transformWithState's per-partition, per-batch
   * timer set-up, timer column families or per-timer encoder projections.
+  *
+  * State store: transformWithState keeps each declared state and its
+  * timers in column families, which only the RocksDB provider has. Every
+  * builder that plans one (here, in `Triggers` and in `AsOfStream`) calls
+  * [[requireRocksDBStateStore]]; nothing else picks a provider, so the
+  * fixed-window pane step and Spark's own stateful operators stay on the
+  * default HDFS-backed store (see `graft.GraftSession`).
   */
 object Stateful {
 
   /** transformWithState requires a state store with column families —
     * RocksDB (bundled with Spark), not the default HDFS-backed provider.
-    * Call once per session before starting stateful queries. */
+    * Only the transformWithState builders call this, while the query is
+    * built; it is the one place that chooses a provider.
+    *
+    * The setting sticks for the session: a fixed-window
+    * `Triggers.triggeredAggregate` built later in the same session starts
+    * on RocksDB too, which is correct, only slower. A query that has run
+    * once keeps the provider its checkpoint recorded, whatever the
+    * session says at restart. */
   def requireRocksDBStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -104,7 +118,9 @@ object Stateful {
       override def handleExpiredTimer(key: K, tv: TimerValues, info: ExpiredTimerInfo): Iterator[O] =
         onTimer(key, states, getHandle, tv, info)
     }
-    grouped.transformWithState(proc, timeMode, outputMode)
+    val ds = grouped.transformWithState(proc, timeMode, outputMode)
+    requireRocksDBStateStore(ds.sparkSession)
+    ds
   }
 
   /** GroupIntoBatches, streaming form (reference:
@@ -169,9 +185,9 @@ object Stateful {
         // nothing buffered: DELETE the count row rather than writing 0 —
         // an update(0) pins one state row per key forever (a dead key
         // never evicts), which is unbounded state growth over the key
-        // cardinality's lifetime. Caught by StreamBench's r18
-        // bounded-state assertion: 2000 quiescent rows where the
-        // documented envelope is 0.
+        // cardinality's lifetime. Caught by the r18 stream benchmark's
+        // bounded-state assertion (BASELINE.md): 2000 quiescent rows where
+        // the documented envelope is 0.
         cnt.clear()
       }
       out.reverseIterator
@@ -201,6 +217,7 @@ object Stateful {
       vTag: scala.reflect.ClassTag[V]): Dataset[(K, List[V])] = {
     val ds = grouped.transformWithState(
       new GroupIntoBatchesProcessor[K, V](n, flushDelayMs), timeMode, OutputMode.Append())
+    requireRocksDBStateStore(ds.sparkSession)
     ensureStateStoreCoordinator(ds.sparkSession)
     ds
   }

@@ -220,9 +220,6 @@ object Triggers {
       assigned: Dataset[(K, Long, V)], fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)(
       implicit kEnc: Encoder[(K, Long)], accEnc: Encoder[ACC],
       outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    // not needed by flatMapGroupsWithState, but the session-wide provider
-    // stays the one the composite and session processors need
-    Stateful.requireRocksDBStateStore(assigned.sparkSession)
     val fields = AgnosticEncoders.agnosticEncoderFor(assigned.encoder) match {
       case p: AgnosticEncoders.ProductEncoder[_] => p.fields.map(_.enc)
       case e => throw new IllegalArgumentException(s"triggeredAggregate: not a tuple encoder: $e")

@@ -74,7 +74,7 @@ object TestStream {
       q.processAllAvailable()
     } finally {
       q.stop()
-      // the checkpoint (RocksDB state-store files for stateful pipelines)
+      // the checkpoint (state-store files for stateful pipelines)
       // is dead once the query stops — reclaim it so repeated play() calls
       // don't grow /tmp for the life of the suite
       deleteRecursively(ckpt)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -137,8 +137,14 @@ class CheckpointRecoverySpec extends SparkSpec {
     }
   }
 
-  test("trigger engine: pane index, ON_TIME and final panes continue across a restart") {
-    val input = MemoryStream[(String, Timestamp, Long)](spark)
+  /** The fixed-window pane scenario across one stop and restart, run in
+    * session `s`. `before` and `after` set the session's state store
+    * provider for the first and the second start (None: the session's own
+    * setting). Asserts the pane transcript and returns the checkpoint. */
+  private def paneRestart(s: SparkSession, before: Option[String] = None,
+                          after: Option[String] = None): String = {
+    def useProvider(p: Option[String]): Unit = p.foreach(s.conf.set(ProviderKey, _))
+    val input = MemoryStream[(String, Timestamp, Long)](s)
     val assigned = Triggers.assignFixedWindows(
       input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
         .as[(String, Timestamp, Long)], 60000L)
@@ -158,6 +164,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
     // run 1: unlike the scenarios above, a pane DOES go out before the stop
     // (EARLY, index 0) — the recovered state must continue after it
+    useProvider(before)
     val q1 = restartable(panes, outDir, cp).start()
     try {
       input.addData(("a", ts(10000), 3L), ("a", ts(20000), 4L))
@@ -169,6 +176,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     // (ON_TIME), a late element inside allowedLateness is absorbed, the
     // watermark passes the GC horizon (final pane), and an element beyond
     // it is dropped
+    useProvider(after)
     val q2 = restartable(panes, outDir, cp).start()
     try {
       input.addData(("a", ts(30000), 5L))
@@ -189,6 +197,45 @@ class CheckpointRecoverySpec extends SparkSpec {
         (2, "ON_TIME", 12L, false), (3, "LATE", 3L + 4 + 5 + 6, true)),
         s"panes across the restart: $got")
     } finally q2.stop()
+    cp
+  }
+
+  test("trigger engine: pane index, ON_TIME and final panes continue across a restart") {
+    paneRestart(spark)
+  }
+
+  /** Every offset-log entry of `cp` names `provider`, and the state
+    * directory holds that provider's files and none of the other's. */
+  private def assertOnStore(cp: String, provider: String): Unit = {
+    val providers = checkpointProviders(cp)
+    assert(providers.size > 1 && providers.forall(_ == provider), providers)
+    val (own, other) = if (provider == HdfsProvider) (".delta", ".zip") else (".zip", ".delta")
+    val files = stateFileNames(cp)
+    assert(files.exists(_.endsWith(own)) && !files.exists(_.endsWith(other)), files)
+  }
+
+  test("state store: a fixed-window trigger query on a fresh session runs on the HDFS-backed store") {
+    // nothing in the query's build picks a provider, so Spark's default
+    // serves flatMapGroupsWithState
+    val s = spark.newSession()
+    val cp = paneRestart(s)
+    assert(s.conf.get(ProviderKey) == HdfsProvider, "building the query changed the session")
+    assertOnStore(cp, HdfsProvider)
+  }
+
+  test("state store: a RocksDB-written trigger checkpoint restarts on RocksDB under an HDFS default") {
+    // the checkpoint an earlier build wrote (it set RocksDB while building
+    // the query) restarts on a session back on the HDFS-backed default: the
+    // offset log's provider wins and the panes continue
+    val cp = paneRestart(spark.newSession(), before = Some(RocksDBProvider),
+      after = Some(HdfsProvider))
+    assertOnStore(cp, RocksDBProvider)
+  }
+
+  test("state store: an HDFS-written trigger checkpoint restarted under RocksDB stays HDFS-backed") {
+    val cp = paneRestart(spark.newSession(), before = Some(HdfsProvider),
+      after = Some(RocksDBProvider))
+    assertOnStore(cp, HdfsProvider)
   }
 
   test("trigger engine: a checkpoint written by the transformWithState port fails loudly on restart") {

@@ -16,6 +16,10 @@ import graft.streaming.Triggers._
   * ([[TriggerSim.genSchedule]]) and must emit the same COMPLETE pane
   * transcript: (key, window, paneIndex, timing, isFinal, values).
   *
+  * The engine runs on Spark's default HDFS-backed state store and the
+  * reference on RocksDB, each in a session of its own, so the transcripts
+  * also compare the two providers.
+  *
   * Each trial takes one point of the config space, so the default trials
   * cover every value of each axis: allowed lateness 0, 15 and 1000 s;
   * NoEarlyFiring, EveryBatch and AfterCount(2); accumulating and
@@ -42,7 +46,7 @@ class FuzzFixedTriggerSpec extends SparkSpec {
     * step. Elements go to key "a" or "b" by parity; "__wm" events only
     * move the watermark. */
   private def transcript(build: Build, steps: Seq[Step], noDataBatches: Boolean,
-                         sink: String): Set[PaneT] = {
+                         sink: String, cp: String = ckpt()): Set[PaneT] = {
     val s = sessionWithNoDataBatches(noDataBatches)
     val input = MemoryStream[(String, Timestamp, Long)](s)
     val assigned = Triggers.assignFixedWindows(
@@ -50,7 +54,7 @@ class FuzzFixedTriggerSpec extends SparkSpec {
         .as[(String, Timestamp, Long)], WindowMs)
     val q = build(assigned).toDF("k", "ws", "we", "vs", "idx", "timing", "fin")
       .writeStream.format("memory").queryName(sink)
-      .outputMode("append").option("checkpointLocation", ckpt()).start()
+      .outputMode("append").option("checkpointLocation", cp).start()
     try {
       // with no-data batches off, the last step's watermark only takes
       // effect in one more batch
@@ -91,8 +95,15 @@ class FuzzFixedTriggerSpec extends SparkSpec {
         lateFirings = (trial / 2) % 2 == 0,
         onTimeAlways = (trial / 4) % 2 == 0)
       val noData = (trial / 3) % 2 == 0
-      val got = transcript(engine(cfg), steps, noData, s"fixfz_e$trial")
-      val exp = transcript(reference(cfg), steps, noData, s"fixfz_r$trial")
+      val (engineCp, referenceCp) = (ckpt(), ckpt())
+      val got = transcript(engine(cfg), steps, noData, s"fixfz_e$trial", engineCp)
+      val exp = transcript(reference(cfg), steps, noData, s"fixfz_r$trial", referenceCp)
+      // the engine runs on the store stream_panes times, the reference on
+      // the one transformWithState needs
+      assert(checkpointProviders(engineCp).distinct == Seq(HdfsProvider) &&
+        checkpointProviders(referenceCp).distinct == Seq(RocksDBProvider),
+        s"trial $trial providers: engine ${checkpointProviders(engineCp).distinct}, " +
+          s"reference ${checkpointProviders(referenceCp).distinct}")
       assert(got == exp,
         s"trial $trial diverged\n cfg=$cfg noDataBatches=$noData\n steps=$steps\n " +
           s"engine-only=${show(got -- exp)}\n reference-only=${show(exp -- got)}")

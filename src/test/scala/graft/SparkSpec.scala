@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +28,38 @@ trait SparkSpec extends AnyFunSuite {
   /** Fresh streaming-checkpoint dir (shared by every streaming suite). */
   def ckpt(): String =
     java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+
+  /** The conf that picks the state store, and the two providers Spark
+    * ships. A fresh `spark.newSession()` starts on the HDFS-backed default;
+    * the shared [[spark]] session is on RocksDB for good once any suite
+    * has built a transformWithState query in it. */
+  val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val RocksDBProvider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  val HdfsProvider = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+  /** The provider recorded in each `offsets/<n>` entry of a streaming
+    * checkpoint, in batch order. Spark records it at the first start and
+    * reads it back on every restart, whatever the session says then. */
+  def checkpointProviders(cp: String): Seq[String] = {
+    val entry = ("\"" + java.util.regex.Pattern.quote(ProviderKey) + "\":\"([^\"]+)\"").r
+    Option(new java.io.File(cp, "offsets").listFiles()).toSeq.flatten
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+      .map { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        entry.findFirstMatchIn(text).map(_.group(1))
+          .getOrElse(fail(s"no state store provider in $f"))
+      }
+  }
+
+  /** Names of the files under a checkpoint's `state` directory: the
+    * HDFS-backed store writes `<version>.delta`, RocksDB `<version>.zip`
+    * and `.sst` files. */
+  def stateFileNames(cp: String): Seq[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(cp, "state"))
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(_.getFileName.toString).toList
+    finally files.close()
+  }
 
   /** The list-collecting CombineFn the trigger/session suites aggregate
     * with (sorted output so bags compare deterministically). */

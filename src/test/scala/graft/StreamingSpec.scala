@@ -335,7 +335,7 @@ class StreamingSpec extends SparkSpec {
       val sizes = spark.table("gib_test").collect().map(_.getInt(1)).sorted.toSeq
       assert(sizes.contains(5), s"straggler batch flushed by event-time timer: $sizes")
 
-      // state-row leak pin (r18, caught by StreamBench's bounded-state
+      // state-row leak pin (r18, caught by the stream benchmark's bounded-state
       // assertion): a FLUSHED key must leave ZERO quiescent state rows —
       // the old cnt.update(0) pinned one row per key forever, unbounded
       // over the key cardinality's lifetime. After this advance only the
