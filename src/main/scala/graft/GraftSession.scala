@@ -13,9 +13,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * DataFrame lineage plays that role, and Catalyst supplies the optimizer
   * Beam never had.
   *
-  * Scale notes: shuffle partitions default to the local core count (the
-  * driver harness runs local[32]); on a real cluster AQE coalesces and
-  * re-splits at runtime, so we enable it unconditionally.
+  * Scale notes: the master defaults to `local[N]` and shuffle partitions
+  * to N, where N is `SPARK_GRAFT_CPUS` or, when that is unset, the JVM's
+  * available processors; on a real cluster AQE coalesces and re-splits at
+  * runtime, so we enable it unconditionally.
   *
   * State store provider: the session sets none, so each stateful operator
   * family gets the store it needs.
@@ -38,8 +39,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object GraftSession {
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(master: String = s"local[$cpus]", shufflePartitions: Int = cpus)
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -63,10 +66,10 @@ object GraftSession {
       // mode it prevents is real: the r15 sf30 sweep OOM'd
       // q_dedup_clusters' star-contraction sorts while half the pool sat
       // in no-longer-hot verify-join caches (BASELINE.md r16). On a
-      // production cluster the same reasoning holds per executor.
-      // (env override is for A/B measurement only — see BASELINE.md r17.)
-      .config("spark.memory.storageFraction",
-        sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.1"))
+      // production cluster the same reasoning holds per executor. A/B on
+      // healthy fixtures: BASELINE.md round 18, "spark.memory.storageFraction
+      // A/B".
+      .config("spark.memory.storageFraction", "0.1")
       // ContextCleaner depends on DRIVER GC to discover unreferenced
       // broadcasts/persists (several operators share an intermediate
       // across two branches of one action and rely on the cleaner for

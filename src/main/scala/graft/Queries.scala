@@ -602,9 +602,10 @@ object Queries {
     s.conf.set(widthConf, widthUs.toString)
     try {
       val rewritten = graft.plans.RangeJoinRewrite(s)(naive.queryExecution.analyzed)
-      // STRUCTURAL fired-check, not a plan-string grep (shared with the
-      // ScaleProbe duels): a rename of the temp column fails this require
-      // loudly instead of silently weakening it.
+      // STRUCTURAL fired-check, not a plan-string grep: a rename of the
+      // temp column fails this require loudly instead of silently
+      // weakening it (the rewrite's measurements: BASELINE.md round 7,
+      // "Range-join width/guard duel").
       require(graft.plans.PlanLint.binJoinFired(rewritten),
         s"$tag: RangeJoinRewrite did not fire on the naive plan " +
           s"(no join keyed on a __bin attribute):\n${rewritten.toString.take(2000)}")
@@ -735,9 +736,8 @@ object Queries {
     * per-group walk once per covering window; the pair-attribution idiom —
     * reduce once globally, then attribute results to the ≤ size/period
     * covering windows via [[Windows.slidingWindowStartsCovering]] — is the
-    * scale-safe alternative (see [[qTrafficRoutes]];
-    * `SPARK_GRAFT_PAIRDUEL_ONLY=1` ScaleProbe measures the two
-    * formulations head-to-head). */
+    * scale-safe alternative (see [[qTrafficRoutes]]; the two formulations
+    * head-to-head: BASELINE.md round 9, "Pair-attribution micro-duel"). */
   def qWindowSliding(s: SparkSession, dir: String): DataFrame =
     Windows.aggregate(t(s, dir, "events"),
       Windows.WindowingStrategy(Windows.SlidingWindows("1 hour", "15 minutes")), col("ts"),
@@ -2507,7 +2507,7 @@ object Queries {
   /** TPC-H Q3 shape (shipping-priority): 3-way join with filters on every
     * input, revenue aggregation, bounded top-10 — the classic composed
     * analytic plan (pushdown on all three scans, broadcast dim, partial
-    * aggregation, TakeOrdered — audited in PlanAudit). Revenue is per-row
+    * aggregation, TakeOrdered — pinned in PlanShapeSpec). Revenue is per-row
     * cents-rounded then summed as exact integers (the catalog's money
     * discipline), so the DuckDB replay hash-matches. */
   def qTpchQ3(s: SparkSession, dir: String): DataFrame = {

@@ -9,10 +9,9 @@ object Verify {
     // Optional query-name filter for fast single-query iteration; the
     // driver passes no names and gets the full catalog.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the bench's session (GraftSession.builder), so the oracle checks the
     // config that is timed
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -399,7 +399,7 @@ object Aggregates {
 
   /** Combine.perKey(...).withHotKeyFanout (reference: Combine.java:1598):
     * two-stage combine with key salting for skew. Measured head-to-head
-    * (ScaleProbe hotkey duel, BASELINE.md r10): for anything planned as
+    * (BASELINE.md round 10, "Hot-key fanout skew duel"): for anything planned as
     * `groupBy().agg(...)` — algebraic OR holistic (collect_list gets
     * ObjectHashAggregate partials too) — Catalyst's map-side partial
     * aggregation already does what Beam's fanout does by hand, and the salt

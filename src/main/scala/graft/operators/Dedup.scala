@@ -496,7 +496,8 @@ object Dedup {
     // (the expensive verified-jaccard join upstream) once PER BRANCH. At
     // sf1 (7M-edge near-clique candidate graph) the swap-union formulation
     // cost 5.2 s just to materialize edges vs ~1.4 s for the pair pipeline
-    // itself — measured by ScaleProbe's dedupClusterProbe.
+    // itself (BASELINE.md round 13, "sf1 slowest-query review, continued:
+    // q_dedup_clusters (2×)").
     // `canon` keeps SELF-pairs without paying a second cache: a self-pair
     // (a, a) canonicalizes to the marker (a, null) — a doc whose only
     // candidate pair is a self-pair is still a node of the graph and must

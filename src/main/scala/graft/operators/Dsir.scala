@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   *    uses the salted two-phase bounded top-k, never a global rank window.
   *
   * 100 TB story: per-doc work is row-local (ngram hash → one row per
-  * DISTINCT per-doc ngram, never re-grouped — see [[hashedCounts]]); the
-  * only shuffles are each consumer's own partial-aggregated reduction
+  * DISTINCT per-doc ngram, never re-grouped — the fused
+  * [[graft.expressions.HashedNgramBuckets]] kernel); the only shuffles
+  * are each consumer's own partial-aggregated reduction
   * (model aggregate ≤ buckets rows, per-doc score one row per doc); the
   * model join is a broadcast; top-k is the salted bounded heap. Nothing
   * grows with corpus size except the linear scan.
@@ -53,29 +54,6 @@ object Dsir {
       (w, i) => concat(w, lit(" "), element_at(words, i + 2)))
     concat(words, bigrams)
   }
-
-  /** Per-doc hashed feature counts: (doc_id, is_target, bucket, cnt).
-    * ONE codegen'd extraction pass ([[graft.expressions.WordNgramCounts]])
-    * emits the already-reduced per-doc ngram→count map, so the explode
-    * carries one row per DISTINCT ngram (not per instance) and no
-    * interpreted lambda runs per element.
-    *
-    * Rows are NOT re-reduced per (doc, bucket): two ngrams hash-colliding
-    * into one bucket yield two rows. Every consumer in this file and in
-    * [[Classifier]] aggregates sums that DISTRIBUTE over the split
-    * (Σ cnt·f(bucket) is identical either way), and the re-aggregation a
-    * previous formulation ran here shuffled the whole exploded frame by
-    * (doc, bucket) before any consumer's own partial agg could collapse
-    * it — the model aggregate collapses map-side to ≤ buckets rows and
-    * the per-doc scoring aggregate to one row per doc, so with the
-    * groupBy gone nothing corpus-sized crosses an exchange. */
-  def hashedCounts(docs: DataFrame, id: Column, text: Column,
-                   isTarget: Column, buckets: Int): DataFrame =
-    docs.select(id.cast("long").as("doc_id"), isTarget.as("is_target"),
-        explode(graft.expressions.TextExpressions.wordNgramCounts(lower(text))))
-      .select(col("doc_id"), col("is_target"),
-        pmod(hash60(col("key")), lit(buckets.toLong)).as("bucket"),
-        col("value").as("cnt"))
 
   /** Population-derived bucket count for [[importanceWeights]] — the
     * SCALING.md meta-rule applied to the hashed feature space: collisions

@@ -275,8 +275,8 @@ object Joins {
     * allowExactMatches combination (differentially pinned in JoinsSpec);
     * cost is one extra bounded aggregate + small join, so leave
     * sliceWidth at 0 unless a key's per-key history outgrows one task —
-    * at 100 TB that's the only shape where the plain plan fails, and the
-    * duel (ScaleProbe SPARK_GRAFT_ASOFSKEW_ONLY) measures the cutover.
+    * at 100 TB that's the only shape where the plain plan fails (the
+    * cutover: BASELINE.md round 13, "As-of hot-key skew duel").
     * Width is in ts-long units (epoch MICROS for timestamps).
     *
     * `left` keeps ALL its columns; `rightPayload` columns (disjoint names

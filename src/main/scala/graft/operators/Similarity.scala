@@ -327,8 +327,6 @@ object Similarity {
       .select(col("id"), col("cell"), col("dup_of"), col("dup_of").isNull.as("keep"))
   }
 
-  /** [[semDedup]]'s clustering stage, exposed for occupancy diagnostics
-    * (ScaleProbe): (id, vec, nrm, cell), or None on an empty corpus. */
   /** md5-seeded centroids + `iters` Lloyd rounds, as plain arrays — the
     * persistable half of the clustering state (k×dim doubles; write them
     * wherever model artifacts live and feed [[assignToCentroids]] /
@@ -341,9 +339,11 @@ object Similarity {
     (0 until iters).foldLeft(seeds)((c, _) => lloydRound(embs, vec, c))
   }
 
-  private[graft] def assignCells(embs: DataFrame, id: Column, vec: Column,
-                                 nlist: Int, lloydIters: Int,
-                                 multiConsumer: Boolean = false): Option[DataFrame] = {
+  /** [[semDedup]]'s clustering stage: (id, vec, nrm, cell), or None on an
+    * empty corpus. */
+  private def assignCells(embs: DataFrame, id: Column, vec: Column,
+                          nlist: Int, lloydIters: Int,
+                          multiConsumer: Boolean = false): Option[DataFrame] = {
     requireIntegralId(embs, id)
     val seeds = md5Seeds(embs, id, vec, nlist)
     if (seeds.isEmpty) return None
@@ -525,12 +525,12 @@ object Similarity {
     * occupancy grows as increments append — a store clustered for its
     * original size eventually makes every increment pay quadratic
     * within-cell comparisons (measured: the catalog query's fixed 400-row
-    * corpus at k=8 turns 3× data into 13× wall at sf3; ScaleProbe's
-    * SPARK_GRAFT_SEMINCR_ONLY duel). Periodically re-derive k from the
-    * store size ([[nlistFor]]) and re-assign — the SemDeDup sibling of
-    * [[graft.operators.Dedup.compactStore]]'s lifecycle role. Returns the
-    * fresh centroids (persist via [[graft.sources.Models]]) and the
-    * re-clustered store. Cluster count is a RECALL knob of SemDeDup
+    * corpus at k=8 turns 3× data into 13× wall at sf3; BASELINE.md
+    * round 13, "sf3 probe: a second scale step"). Periodically re-derive
+    * k from the store size ([[nlistFor]]) and re-assign — the SemDeDup
+    * sibling of [[graft.operators.Dedup.compactStore]]'s lifecycle role.
+    * Returns the fresh centroids (persist via [[graft.sources.Models]])
+    * and the re-clustered store. Cluster count is a RECALL knob of SemDeDup
     * itself (coarser cells compare more cross-direction pairs) —
     * identical vectors still co-locate under ANY k because assignment is
     * a deterministic argmin — so re-clustering gives exactly the recall a
@@ -858,9 +858,10 @@ object Similarity {
     * bucket occupancy is `targetBucketSize` — planes = ceil(log2(n /
     * target)), clamped to [1, 62]. Pairwise re-rank work per bucket grows
     * with occupancy², so holding occupancy constant as the corpus grows is
-    * what keeps the LSH join linear at 100 TB (the fixed-planes ScaleProbe
-    * showed 4.0× time at ×32 data; with this knob the bucket count scales
-    * with n and the ratio flattens). */
+    * what keeps the LSH join linear at 100 TB (fixed planes showed 4.0×
+    * time at ×32 data; with this knob the bucket count scales with n and
+    * the ratio flattens: BASELINE.md round 5, "LSH planes auto-tuning
+    * duel"). */
   def planesFor(corpusCount: Long, targetBucketSize: Long = 64L): Int = {
     require(targetBucketSize >= 1, "targetBucketSize must be >= 1")
     val ratio = math.max(1.0, corpusCount.toDouble / targetBucketSize.toDouble)

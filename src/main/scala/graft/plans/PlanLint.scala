@@ -114,38 +114,19 @@ object PlanLint {
     out.result().distinct
   }
 
-  /** Throw (naming every finding) if the plan has `error`-level findings —
-    * the CI/preflight form: `PlanLint.assertScalable(df)` before a big run. */
   /** Structural "RangeJoinRewrite fired" check on a LOGICAL plan: some
     * join's equi-condition references a `__bin`-named attribute (the
-    * rewrite's bucketed key). Shared by the catalog gate
-    * (Queries.withBucketWidth) and the ScaleProbe duels so a temp-column
-    * rename fails every pin loudly instead of silently weakening one. */
+    * rewrite's bucketed key). The catalog gate (Queries.withBucketWidth)
+    * calls it so a temp-column rename fails loudly instead of silently
+    * weakening the gate. */
   def binJoinFired(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
     plan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
         if j.condition.exists(_.references.exists(_.name.startsWith("__bin"))) => j
     }.nonEmpty
 
-  /** Structural "AQE skew-split engaged" check on an EXECUTED plan: an
-    * AQEShuffleRead holding a partial-reducer (skew-split) partition spec,
-    * or a shuffled join marked isSkewJoin — never a plan-string grep
-    * (any "skew" in a path/conf would satisfy one, and a node rename
-    * would defeat it). Unwraps the top-level adaptive plan, which is a
-    * LEAF node that plain collect would not see into. */
-  def skewSplitEngaged(plan: SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec}
-    import org.apache.spark.sql.execution.PartialReducerPartitionSpec
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    val p = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-    p.collect {
-      case r: AQEShuffleReadExec
-        if r.partitionSpecs.exists(_.isInstanceOf[PartialReducerPartitionSpec]) => r
-      case j: SortMergeJoinExec if j.isSkewJoin => j
-      case j: ShuffledHashJoinExec if j.isSkewJoin => j
-    }.nonEmpty
-  }
-
+  /** Throw (naming every finding) if the plan has `error`-level findings —
+    * the CI/preflight form: `PlanLint.assertScalable(df)` before a big run. */
   def assertScalable(df: DataFrame): Unit = {
     val errors = lint(df).filter(_.severity == "error")
     require(errors.isEmpty,

@@ -15,8 +15,8 @@ import graft.expressions.LayoutExpressions
   * interleave of both columns, so every file covers a small rectangle of
   * the 2-D space and BOTH columns' stats are tight — the standard
   * lakehouse technique (classic multi-dimensional indexing applied to
-  * columnar files). Measured duel in BASELINE.md (ScaleProbe
-  * SPARK_GRAFT_ZORDER_ONLY).
+  * columnar files). Measured duel: BASELINE.md round 5, "Z-order layout
+  * pruning duel".
   */
 object Layout {
 

@@ -6,8 +6,8 @@ import org.apache.spark.SparkContext
   * drain (`waitUntilEmpty`) that Spark's own tests use to make listener
   * metrics attribution exact needs a one-liner inside the spark namespace —
   * same technique as [[org.apache.spark.sql.graftbridge.ColumnBridge]].
-  * Dev-tool use only (ScaleProbe duels); the library itself registers no
-  * listeners.
+  * Used by the perfbench harness and `PlanShapeSpec`; the library itself
+  * registers no listeners.
   */
 object ListenerBridge {
   /** Block until every queued listener event has been delivered. */

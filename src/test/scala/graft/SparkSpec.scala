@@ -79,13 +79,9 @@ object SparkSpec {
     // RetryDeterminismSpec (whose planted first-attempt failures need the
     // retry); suites that assert job failure still fail (the retried
     // attempt throws the same deterministic error).
-    val s = SparkSession.builder().master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
-      .getOrCreate()
+    // Every other conf is GraftSession.builder's, so the suites test the
+    // session config that the oracle checks and the benchmark times.
+    val s = GraftSession.builder("local[4, 2]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

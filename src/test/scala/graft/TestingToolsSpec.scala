@@ -163,4 +163,19 @@ class TestingToolsSpec extends SparkSpec {
     val bundleSizes = out.collect { case ("bundle_size", v) => v.toInt }
     assert(bundleSizes.sum == 4 && bundleSizes.forall(_ >= 0))
   }
+
+  test("the shared test session carries GraftSession.builder's confs") {
+    // the confs the session was built with, not the runtime SQL conf that
+    // a suite may have changed and restored since
+    val conf = spark.sparkContext.getConf
+    val expected = Seq(
+      "spark.master" -> "local[4, 2]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.memory.storageFraction" -> "0.1",
+      "spark.cleaner.periodicGC.interval" -> "2min",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName)
+    for ((k, v) <- expected) assert(conf.getOption(k).contains(v), k)
+  }
 }
