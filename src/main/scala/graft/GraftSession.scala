@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *    row on the heap; a stream whose state approaches the heap sets
   *    `spark.sql.streaming.stateStore.providerClass` to RocksDB itself
   *    before its first start.
-  *  - transformWithState (stateful ParDo, GroupIntoBatches, the composite
-  *    and session trigger processors, the streaming as-of joins) needs
+  *  - transformWithState (stateful ParDo, GroupIntoBatches, the one pane
+  *    processor for composite triggers on fixed, sliding and merging
+  *    windows, the streaming as-of joins) needs
   *    column families, which only RocksDB has: each of those builders calls
   *    `Stateful.requireRocksDBStateStore`.
   *  - batch transformWithState builds a RocksDB store whatever the conf

@@ -578,14 +578,14 @@ object Queries {
       .agg(count(lit(1)).as("n_clicks"), sum(col("click_cents")).as("sum_cents"))
   }
 
-  /** Build-time scope for the RangeJoinRewrite width conf (shared by the
-    * q_range_rewrite / q_overlap_rewrite builders): apply the REWRITE RULE
-    * directly to the analyzed `naive` plan with the conf set, require it
-    * fired (the plan carries the bucketed __bin join), restore the conf,
-    * and return the frame carrying the already-rewritten plan — nothing
-    * leaks into the session, and execution optimizes the bucketed plan
-    * once (the rewrite is idempotent: its join condition is equalities
-    * only, so the session-injected rule instance finds nothing to match).
+  /** Build-time RangeJoinRewrite (shared by the q_range_rewrite /
+    * q_overlap_rewrite builders): apply the REWRITE RULE, given the width
+    * directly, to the analyzed `naive` plan, require it fired (the plan
+    * carries the bucketed __bin join), and return the frame carrying the
+    * already-rewritten plan — the session conf is never touched, and
+    * execution optimizes the bucketed plan once (the rewrite is
+    * idempotent: its join condition is equalities only, so the
+    * session-injected rule instance finds nothing to match).
     *
     * Deliberately NOT `queryExecution.optimizedPlan`: forcing the FULL
     * optimizer at build time was measured as the one 8-way-FAIR
@@ -597,39 +597,25 @@ object Queries {
     * analysis preserves. */
   private def withBucketWidth(s: SparkSession, widthUs: Long,
                               naive: DataFrame, tag: String): DataFrame = {
-    val widthConf = "spark.graft.rangeJoin.bucketWidth"
-    val prev = s.conf.getOption(widthConf)
-    s.conf.set(widthConf, widthUs.toString)
-    try {
-      val rewritten = graft.plans.RangeJoinRewrite(s)(naive.queryExecution.analyzed)
-      // STRUCTURAL fired-check, not a plan-string grep: a rename of the
-      // temp column fails this require loudly instead of silently
-      // weakening it (the rewrite's measurements: BASELINE.md round 7,
-      // "Range-join width/guard duel").
-      require(graft.plans.PlanLint.binJoinFired(rewritten),
-        s"$tag: RangeJoinRewrite did not fire on the naive plan " +
-          s"(no join keyed on a __bin attribute):\n${rewritten.toString.take(2000)}")
-      org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(s, rewritten)
-    } finally prev match {
-      case Some(v) => s.conf.set(widthConf, v)
-      case None => s.conf.unset(widthConf)
-    }
+    val rewritten = graft.plans.RangeJoinRewrite(s)(naive.queryExecution.analyzed, widthUs)
+    // STRUCTURAL fired-check, not a plan-string grep: a rename of the
+    // temp column fails this require loudly instead of silently
+    // weakening it (the rewrite's measurements: BASELINE.md round 7,
+    // "Range-join width/guard duel").
+    require(graft.plans.PlanLint.binJoinFired(rewritten),
+      s"$tag: RangeJoinRewrite did not fire on the naive plan " +
+        s"(no join keyed on a __bin attribute):\n${rewritten.toString.take(2000)}")
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(s, rewritten)
   }
 
   /** The same point-in-interval attribution written the NAIVE way —
     * `points.join(intervals, p >= lo && p < hi)` — to prove the
-    * RangeJoinRewrite optimizer tier end-to-end on real tables: with
-    * `spark.graft.rangeJoin.bucketWidth` set (done here, at build time),
-    * the Catalyst rule rebuilds the BroadcastNestedLoopJoin shape into the
-    * bucketed equi-join; ExtensionsSpec pins THIS query's executed plan
-    * (bin equi-join, no BNL). A different slice than q_range_join (every
-    * 5th signup, 2-hour windows) so the two oracles are independent.
-    * The width conf is scoped to THIS builder: the optimizer (with the
-    * injected rule) is forced while the conf is set, the rewrite is
-    * require-checked, and the conf is restored — the returned frame
-    * carries the already-rewritten plan, so nothing leaks into the
-    * session and later executions re-optimize a plan that is already
-    * bucketed (idempotent: its join condition is equalities only). */
+    * RangeJoinRewrite optimizer tier end-to-end on real tables: given
+    * the width at build time, the Catalyst rule rebuilds the
+    * BroadcastNestedLoopJoin shape into the bucketed equi-join;
+    * ExtensionsSpec pins THIS query's executed plan (bin equi-join, no
+    * BNL). A different slice than q_range_join (every 5th signup, 2-hour
+    * windows) so the two oracles are independent. */
   def qRangeRewrite(s: SparkSession, dir: String): DataFrame = {
     val twoHoursUs = 2L * 3600 * 1000000
     val ev = t(s, dir, "events")
@@ -690,10 +676,10 @@ object Queries {
 
   /** The interval-overlap attribution written the NAIVE way — `a.join(b,
     * a_lo < b_hi && b_lo < a_hi)` — proving the rule's SECOND rewritable
-    * form end-to-end on real tables, same conf-scoped pattern as
-    * q_range_rewrite (optimizer forced under the flag, rewrite
-    * require-checked, conf restored, the returned frame carries the
-    * rewritten plan). A different slice than q_interval_join (every 9th
+    * form end-to-end on real tables, same build-time pattern as
+    * q_range_rewrite (the rule given the width, the rewrite
+    * require-checked, the returned frame carries the rewritten plan).
+    * A different slice than q_interval_join (every 9th
     * signup × every 7th error) so the oracles are independent. */
   def qOverlapRewrite(s: SparkSession, dir: String): DataFrame = {
     val hourUs = 3600L * 1000000

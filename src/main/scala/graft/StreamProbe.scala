@@ -10,9 +10,10 @@ import graft.streaming.Triggers._
 
 /** Streaming trigger-engine scale probe (dev tool, not part of the library):
   * drives [[Triggers.triggeredAggregateComposite]] and
-  * [[Triggers.sessionAggregateTriggered]] — the two RocksDB-backed pane
-  * processors — with a ×N synthetic MemoryStream workload (N× the keys,
-  * same window/session script per key) and records:
+  * [[Triggers.sessionAggregateTriggered]] — both callers of the one
+  * RocksDB-backed transformWithState pane processor — with a ×N
+  * synthetic MemoryStream workload (N× the keys, same window/session
+  * script per key) and records:
   *
   *  - wall time and events/sec at base and ×N scale (the ratio shows
   *    whether per-key state work scales linearly);

@@ -257,9 +257,7 @@ object Joins {
     * below for the mitigation when one entity's full history is still
     * too big for one task.
     *
-    * `sliceWidth` > 0 (or the session conf `spark.graft.asof.sliceWidth`
-    * when the parameter is left at its -1 default; an explicit 0 forces
-    * the plain plan) switches to the TIME-SLICED two-pass plan —
+    * `sliceWidth` > 0 switches to the TIME-SLICED two-pass plan —
     * the hot-key skew mitigation, the batch sibling of AsOfStream's
     * dominance GC. Rows partition by (keys, floor(ts/width)); pass 1 runs
     * the same window fill WITHIN each slice (a hot key now spreads over
@@ -317,18 +315,12 @@ object Joins {
            direction: String = "backward",
            tolerance: Long = -1L,
            allowExactMatches: Boolean = true,
-           sliceWidth: Long = -1L): DataFrame = {
+           sliceWidth: Long = 0L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(Set("backward", "forward", "nearest")(direction),
       s"asOf direction must be backward|forward|nearest, got '$direction'")
-    // sliceWidth: -1 (default) defers to the session conf; 0 is an
-    // explicit "plain plan" override; > 0 slices at that width
-    val width =
-      if (sliceWidth >= 0L) sliceWidth
-      else left.sparkSession.conf.get("spark.graft.asof.sliceWidth", "0").toLong
-    require(width >= 0L,
-      s"spark.graft.asof.sliceWidth must be >= 0, got $width")
-    val sliced = width > 0L
+    require(sliceWidth >= 0L, s"asOf sliceWidth must be >= 0, got $sliceWidth")
+    val sliced = sliceWidth > 0L
     val leftCols = left.columns.toSeq
     val otherLeft = leftCols.filterNot(c => keys.contains(c) || c == leftTs)
     require(rightPayload.intersect(leftCols).isEmpty,
@@ -488,7 +480,7 @@ object Joins {
         val sliceTs =
           if (isFrac(uTsType)) when(isnan(col("__ts")), lit(null)).otherwise(col("__ts"))
           else col("__ts")
-        val withSlice = u0.withColumn("__slice", binOf(tsLong(uTsType, sliceTs), width))
+        val withSlice = u0.withColumn("__slice", binOf(tsLong(uTsType, sliceTs), sliceWidth))
         // carry: per (keys, slice) the latest/earliest RIGHT row is one
         // bounded aggregate (max_by/min_by ignore null ordering values, so
         // left rows never win); a per-key window over those #slices rows

@@ -95,7 +95,6 @@ object TextAnalysis {
   }
 
   def lmTrigramScore(docs: DataFrame, id: Column, text: Column,
-                     materializeTrigrams: Boolean = false,
                      maxVocab: Int = 0): DataFrame = {
     val docsT = docs.select(id.cast("long").as("doc_id"), lower(text).as("__t"))
     // ONE compiled extraction pass (graft.expressions.CharNgramCounts)
@@ -111,14 +110,11 @@ object TextAnalysis {
     // ReusedExchange — a near-identity when per-doc distinct trigrams are
     // few, but on trigram-diverse corpora it shuffled the whole
     // (doc, tri) string frame twice (measured 256 s at sf10 where the
-    // two kernel passes cost seconds). `materializeTrigrams = true` pins
-    // the exploded frame for re-entrant callers (extraction then runs
-    // once at the cost of materializing it).
-    val perDocRaw = docsT
+    // two kernel passes cost seconds).
+    val perDoc = docsT
       .select(col("doc_id"),
         explode(graft.expressions.TextExpressions.charNgramCounts(col("__t"), 3)))
       .select(col("doc_id"), col("key").as("tri"), col("value").as("cnt"))
-    val perDoc = if (materializeTrigrams) perDocRaw.localCheckpoint(false) else perDocRaw
     val modelAll = perDoc.groupBy(col("tri")).agg(sum(col("cnt")).as("cnt"))
     // Scalar corpus total + broadcast, NOT sum().over(Window.partitionBy()):
     // the unpartitioned window would serialize the whole vocabulary frame

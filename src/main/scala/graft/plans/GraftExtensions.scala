@@ -170,7 +170,6 @@ private[plans] final case class OverlapMatch(
   * pair. */
 case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private val WidthConf = "graft.rangeJoin.bucketWidth"
   // every temp the operators derive — including the outer variant's
   // anti-leg names — so a user column with one of these names makes the
   // rule SKIP instead of producing an ambiguous-reference failure
@@ -179,8 +178,7 @@ case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       "__alo", "__ahi", "__blo", "__bhi")
 
   private def width: Long =
-    spark.conf.getOption(s"spark.$WidthConf")
-      .orElse(spark.conf.getOption(WidthConf)).map(_.toLong).getOrElse(0L)
+    spark.conf.getOption("spark.graft.rangeJoin.bucketWidth").map(_.toLong).getOrElse(0L)
 
   private def splitConj(e: Expression): Seq[Expression] = e match {
     case And(a, b) => splitConj(a) ++ splitConj(b)
@@ -238,8 +236,11 @@ case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => ColumnBridge.column(a)
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val w = width
+  override def apply(plan: LogicalPlan): LogicalPlan = apply(plan, width)
+
+  /** The rule at bucket width `w` instead of the session conf's, for a
+    * builder that applies it itself. */
+  def apply(plan: LogicalPlan, w: Long): LogicalPlan = {
     if (w <= 0) return plan
     plan.transformUp {
       // match once: noTempNames is the cheap pre-filter, then the single

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, ExpressionEncoder}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions.{col, lit, timestamp_millis, udf}
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
 
 import graft.functions.CombineFn
 import graft.operators.Windows
@@ -30,9 +30,10 @@ import graft.operators.Windows
   * (userKey, windowStart) so per-(key, window) state matches Beam's state
   * namespaces (RCORE/StateNamespaces.java). Two event-time steps per
   * window: end-of-window (ON_TIME firing) and end + allowedLateness (final
-  * firing + state GC). The fixed-window processor keeps one timeout that
-  * moves from the first to the second; the composite and session
-  * processors register a timer for each.
+  * firing + state GC). The fixed-window step keeps one timeout that moves
+  * from the first to the second; the one transformWithState pane
+  * processor, which runs composite triggers on fixed, sliding and merging
+  * windows, registers a timer for each.
   */
 object Triggers {
 
@@ -94,9 +95,9 @@ object Triggers {
   /** The ReduceFnRunner analogue for one (key, window), as a
     * flatMapGroupsWithState step under EventTimeTimeout: one state row per
     * (key, window) that carries both the pane record and the window's one
-    * pending timeout. The composite and session processors below run on
-    * transformWithState instead, because they need several timers and
-    * MapState per key; this one needs neither, and transformWithState's
+    * pending timeout. The composite-trigger pane processor below runs on
+    * transformWithState instead, because it needs several timers and
+    * MapState per group; this step needs neither, and transformWithState's
     * timer index, timer column families and per-call encoder projections
     * cost every partition every micro-batch whether or not a timer is due.
     *
@@ -308,8 +309,9 @@ object Triggers {
     *    granularity after the deadline, the same cadence Beam's
     *    processing-time firings exhibit under a micro-batch runner.
     *    Quiescent keys are covered by a CATCH-UP event-time timer: while a
-    *    deadline is armed, the processor keeps a timer registered just past
-    *    the current watermark, so any later batch — data for OTHER keys
+    *    deadline is armed, the pane processor (fixed, sliding and merging
+    *    windows alike) keeps a timer registered just past the current
+    *    watermark, so any later batch — data for OTHER keys
     *    included — wakes the armed key and re-checks the proc-time clock
     *    (re-registering until the deadline passes). A key goes unwoken only
     *    if the whole stream is silent, in which case no micro-batch runs at
@@ -530,227 +532,50 @@ object Triggers {
     }
   }
 
-  /** ReduceFnRunner with a composite trigger. Fires whenever the root
-    * trigger says so; a finished root emits its pane as FINAL and GCs the
-    * window. Timing labels: EARLY before the watermark passes end-of-window,
-    * ON_TIME for the first at/after, LATE subsequently. */
-  private class CompositeTriggerProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], trigger: TriggerAst,
-      windowSizeMs: Long, allowedLatenessMs: Long, accumulating: Boolean)(
-      implicit accEnc: Encoder[ACC], outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[(K, Long), (K, Long, V), Pane[K, OUT]] {
-
-    @transient private var acc: ValueState[ACC] = _
-    @transient private var paneIndex: ValueState[Int] = _
-    @transient private var trigState: ValueState[List[(String, Long, Boolean, Long)]] = _
-    @transient private var onTimeDone: ValueState[Boolean] = _
-    @transient private var timersSet: ValueState[Boolean] = _
-    @transient private var sinceFire: ValueState[Long] = _
-    /** Set when the root trigger finished before the GC horizon: the window
-      * is CLOSED — later data is dropped (droppedDueToClosedWindow), never
-      * re-aggregated into a fresh accumulator. Cleared by the GC timer. */
-    @transient private var closed: ValueState[Boolean] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      acc = getHandle.getValueState[ACC]("acc", accEnc, TTLConfig.NONE)
-      paneIndex = getHandle.getValueState[Int]("paneIndex", Encoders.scalaInt, TTLConfig.NONE)
-      trigState = getHandle.getValueState[List[(String, Long, Boolean, Long)]]("trig",
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[(String, Long, Boolean, Long)]](),
-        TTLConfig.NONE)
-      onTimeDone = getHandle.getValueState[Boolean]("onTimeDone", Encoders.scalaBoolean, TTLConfig.NONE)
-      timersSet = getHandle.getValueState[Boolean]("timersSet", Encoders.scalaBoolean, TTLConfig.NONE)
-      sinceFire = getHandle.getValueState[Long]("sinceFire", Encoders.scalaLong, TTLConfig.NONE)
-      closed = getHandle.getValueState[Boolean]("closed", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    private def windowEnd(ws: Long) = ws + windowSizeMs
-    private def gcTime(ws: Long) = windowEnd(ws) + allowedLatenessMs
-
-    /** One read per input group or timer (`get()` is null when absent); the
-      * map is passed through. A stored state always holds the root path. */
-    private def loadTrig(): TrigState = {
-      val m = collection.mutable.Map.empty[String, (Long, Boolean, Long)]
-      Option(trigState.get()).foreach(_.foreach { case (p, c, f, d) => m(p) = (c, f, d) })
-      m
-    }
-    private def saveTrig(st: TrigState): Unit =
-      trigState.update(st.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
-
-    /** Any unfinished node holding an armed processing-time deadline? */
-    private def armedDeadline(st: TrigState): Boolean =
-      st.valuesIterator.exists { case (_, f, d) => !f && d != Long.MaxValue }
-
-    /** Quiescent-key catch-up (Beam's runner-scheduled proc-time timers,
-      * RCORE/triggers/AfterProcessingTimeStateMachine.java: an idle key
-      * still wakes when its deadline passes): while a proc-time deadline is
-      * armed, keep an event-time timer registered just past the current
-      * watermark. ANY later batch — data for other keys included — advances
-      * the watermark, fires the timer, and re-evaluates this key against
-      * the proc-time clock; if the deadline still hasn't passed, the
-      * handler re-registers. Cost: one timer wake per armed key per
-      * watermark advance, the same cadence Beam's proc-time timers exhibit
-      * under a micro-batch runner. */
-    private def armCatchupTimer(key: (K, Long), wm: Long, st: TrigState): Unit =
-      if (armedDeadline(st) && wm + 1 < windowEnd(key._2))
-        getHandle.registerTimer(wm + 1)
-
-    private def fire(key: (K, Long), wmPastEnd: Boolean, isFinal: Boolean): Pane[K, OUT] = {
-      val idx = if (paneIndex.exists()) paneIndex.get() else 0
-      val a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      paneIndex.update(idx + 1)
-      sinceFire.update(0L)
-      if (!accumulating) acc.update(fn.createAccumulator())
-      val timing =
-        if (!wmPastEnd) "EARLY"
-        else if (!(if (onTimeDone.exists()) onTimeDone.get() else false)) { onTimeDone.update(true); "ON_TIME" }
-        else "LATE"
-      (key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal)
-    }
-
-    /** Fires at most one pane, then saves `st` or (root finished) clears it. */
-    private def evalAndFire(key: (K, Long), wm: Long, nowProcMs: Long,
-                            st: TrigState): Iterator[Pane[K, OUT]] = {
-      val wmPastEnd = wm >= windowEnd(key._2)
-      val ctx = TrigCtx(wmPastEnd, nowProcMs)
-      var out = List.empty[Pane[K, OUT]]
-      if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-        TriggerEval.onFire(trigger, "r", st, ctx)
-        val rootDone = TriggerEval.finished("r", st)
-        out = fire(key, wmPastEnd, isFinal = rootDone) :: out
-        if (rootDone) {
-          // early closure: drop the aggregate state but leave a closed
-          // marker until the GC horizon, so later same-window data is
-          // DROPPED — without it the data would reopen the window with a
-          // fresh accumulator and emit a second "final" pane
-          clearAll()
-          closed.update(true)
-          st.clear() // a closed window arms no catch-up timer
-          return out.reverseIterator
-        }
-      }
-      saveTrig(st)
-      out.reverseIterator
-    }
-
-    override def handleInputRows(key: (K, Long), rows: Iterator[(K, Long, V)],
-                                 tv: TimerValues): Iterator[Pane[K, OUT]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      if (wm >= gcTime(key._2)) return Iterator.empty // too late
-      if (closed.exists() && closed.get()) return Iterator.empty // closed window
-      var a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      var n = 0L
-      rows.foreach { r => a = fn.addInput(a, r._3); n += 1 }
-      acc.update(a)
-      sinceFire.update((if (sinceFire.exists()) sinceFire.get() else 0L) + n)
-      val st = loadTrig()
-      TriggerEval.addElements(trigger, "r", st, n, tv.getCurrentProcessingTimeInMs())
-      if (!(if (timersSet.exists()) timersSet.get() else false)) {
-        getHandle.registerTimer(windowEnd(key._2))
-        getHandle.registerTimer(gcTime(key._2))
-        timersSet.update(true)
-      }
-      val out = evalAndFire(key, wm, tv.getCurrentProcessingTimeInMs(), st)
-      armCatchupTimer(key, wm, st)
-      out
-    }
-
-    override def handleExpiredTimer(key: (K, Long), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
-      if (closed.exists() && closed.get()) {
-        // closed window tombstone: drop it for good at the GC horizon
-        if (info.getExpiryTimeInMs() >= gcTime(key._2)) closed.clear()
-        return Iterator.empty
-      }
-      val st = loadTrig()
-      if (st.isEmpty && !acc.exists()) return Iterator.empty // already gone
-      // GC first: with allowedLateness=0 the end-of-window timer IS the GC
-      // timer (same timestamp, Spark dedups) — window expiry wins
-      if (info.getExpiryTimeInMs() >= gcTime(key._2)) {
-        // Window expiry. Final pane fires when:
-        //  - the trigger itself would fire and its on-time pane has not
-        //    fired yet (e.g. orFinally's AfterWatermark until-clause when
-        //    allowedLateness=0 folds end-of-window into GC), or
-        //  - data arrived since the last firing
-        //    (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105), or
-        //  - no pane ever fired (every window produces at least one pane).
-        val onTime = onTimeDone.exists() && onTimeDone.get()
-        val trigWants = !onTime && TriggerEval.shouldFire(trigger, "r", st,
-          TrigCtx(wmPastEnd = true, tv.getCurrentProcessingTimeInMs()))
-        val pending = if (sinceFire.exists()) sinceFire.get() else 0L
-        val everFired = paneIndex.exists() && paneIndex.get() > 0
-        val out =
-          if (trigWants || pending > 0 || !everFired)
-            Iterator.single(fire(key, wmPastEnd = true, isFinal = true))
-          else Iterator.empty[Pane[K, OUT]]
-        clearAll()
-        out
-      } else {
-        // end-of-window timer vs proc-time catch-up timer: a catch-up fires
-        // BEFORE end-of-window and must not report wmPastEnd — passing
-        // windowEnd here would fire AfterWatermark children early
-        val expiry = info.getExpiryTimeInMs()
-        val wmNow = tv.getCurrentWatermarkInMs()
-        val wmEff =
-          if (expiry >= windowEnd(key._2)) windowEnd(key._2)
-          else math.min(wmNow, windowEnd(key._2) - 1)
-        val out = evalAndFire(key, wm = wmEff, tv.getCurrentProcessingTimeInMs(), st)
-        if (expiry < windowEnd(key._2)) armCatchupTimer(key, wmNow, st)
-        out
-      }
-    }
-
-    private def clearAll(): Unit = {
-      acc.clear(); paneIndex.clear(); trigState.clear(); onTimeDone.clear()
-      timersSet.clear(); sinceFire.clear()
-    }
-  }
-
-  // --------------------------------------------------------- merging sessions
-
-  /** Per-window session state: (end, acc, paneIndex, onTimeFired,
+  /** Per-window pane state: (end, acc, paneIndex, onTimeFired,
     * pendingSinceFire, closed, triggerState). */
   type SessionW[ACC] = (Long, ACC, Int, Boolean, Long, Boolean, List[(String, Long, Boolean, Long)])
 
-  /** Session-window pane processor: the reference's merging-window path
-    * (reference: Sessions.java:40, WindowFn.mergeWindows WindowFn.java:82,
-    * RCORE/MergingActiveWindowSet.java; ReduceFnRunner merge handling,
-    * ReduceFnRunner.java:89 onMerge). Spark's built-in `session_window`
-    * covers untriggered sessions; this operator adds what it cannot
-    * express: pane metadata, late-data panes within allowedLateness, merge
-    * of PARTIAL AGGREGATES — each element opens the proto-window its
+  /** The ReduceFnRunner over an active-window set: the one transformWithState
+    * pane processor, for composite triggers on fixed, sliding and merging
+    * windows (reference: ReduceFnRunner.java:89 onMerge, Sessions.java:40,
+    * WindowFn.mergeWindows WindowFn.java:82, RCORE/MergingActiveWindowSet.java).
+    * Spark's built-in `session_window` covers untriggered sessions; this
+    * operator adds pane metadata, late-data panes within allowedLateness,
+    * merge of PARTIAL AGGREGATES — each element opens the proto-window its
     * WindowFn assigns (`assign(ts, value)`; Sessions = [ts, ts+gap)) and any
-    * overlapping active windows merge via CombineFn.mergeAccumulators (the
+    * intersecting active windows merge via CombineFn.mergeAccumulators (the
     * contract that makes merging windows possible without re-buffering raw
     * elements) — and the FULL composite-trigger AST: each active window
     * carries its own trigger state machine, and window merges merge the
     * trigger state too (TriggerEval.merge — counts add, finished flags OR,
-    * proc-time deadlines take the earliest).
+    * proc-time deadlines take the earliest). Fixed and sliding windows group
+    * by (key, window start), so each of their groups holds one window that
+    * never merges; `paneKey` gives the user key of a grouping key.
     *
-    * Per key: MapState windowStart → [[SessionW]]. Timers fire per window
-    * end (ON_TIME) and end+lateness (final + GC); timers orphaned by merges
-    * are ignored (no active window matches). A window whose ROOT trigger
-    * finishes closes early: its aggregate state drops but a closed
-    * tombstone survives to the GC horizon so later data in its span is
-    * dropped (droppedDueToClosedWindow), not merged into a reopened
-    * window. */
-  private class SessionProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], assign: (Long, V) => (Long, Long),
-      allowedLatenessMs: Long,
-      accumulating: Boolean, trigger: TriggerAst)(
-      implicit accEnc: Encoder[SessionW[ACC]],
-      outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[K, (K, Long, V), Pane[K, OUT]] {
+    * Per group: MapState windowStart → [[SessionW]]. Timers fire per window
+    * end (ON_TIME) and end+lateness (final + GC; with zero lateness the end
+    * timer is the GC timer and GC wins); timers orphaned by merges match no
+    * window and are ignored. A window whose ROOT trigger finishes closes
+    * early: its aggregate state drops but a closed tombstone survives to the
+    * GC horizon so later data in its span is dropped
+    * (droppedDueToClosedWindow), not merged into a reopened window. */
+  private class PaneProcessor[G, K, V, ACC, OUT](
+      fn: CombineFn[V, ACC, OUT], paneKey: G => K, assign: (Long, V) => (Long, Long),
+      allowedLatenessMs: Long, accumulating: Boolean, trigger: TriggerAst)(
+      implicit wEnc: Encoder[SessionW[ACC]])
+      extends StatefulProcessor[G, (K, Long, V), Pane[K, OUT]] {
 
     private type W = SessionW[ACC]
     @transient private var windows: MapState[Long, W] = _
 
     override def init(om: OutputMode, tm: TimeMode): Unit =
       windows = getHandle.getMapState[Long, W](
-        "sessions", Encoders.scalaLong, accEnc, TTLConfig.NONE)
+        "sessions", Encoders.scalaLong, wEnc, TTLConfig.NONE)
 
-    private def fireFrom(key: K, start: Long, w: W, timing: String,
-                         isFinal: Boolean): (Pane[K, OUT], W) = {
-      val out = (key, start, w._1, fn.extractOutput(w._2), w._3, timing, isFinal)
+    private def fire(key: G, start: Long, w: W, timing: String,
+                     isFinal: Boolean): (Pane[K, OUT], W) = {
+      val out = (paneKey(key), start, w._1, fn.extractOutput(w._2), w._3, timing, isFinal)
       val nextAcc = if (accumulating) w._2 else fn.createAccumulator()
       (out, (w._1, nextAcc, w._3 + 1, timing != EARLY || w._4, 0L, w._6, w._7))
     }
@@ -761,16 +586,52 @@ object Triggers {
       m
     }
     private def withTrig(w: W, st: TrigState): W =
-      (w._1, w._2, w._3, w._4, w._5, w._6,
-        st.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
+      w.copy(_7 = st.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
 
-    override def handleInputRows(key: K, rows: Iterator[(K, Long, V)],
+    /** One trigger evaluation of the window starting at `s`: at most one
+      * pane, EARLY before the watermark passes the window end, ON_TIME for
+      * the first at or after it, LATE after that. A finished root leaves
+      * the closed tombstone. */
+    private def evaluate(key: G, s: Long, w: W, wmPastEnd: Boolean,
+                         nowProc: Long): (Option[Pane[K, OUT]], W) = {
+      val st = loadTrig(w)
+      val ctx = TrigCtx(wmPastEnd, nowProc)
+      if (!TriggerEval.shouldFire(trigger, "r", st, ctx)) return (None, w)
+      TriggerEval.onFire(trigger, "r", st, ctx)
+      val rootDone = TriggerEval.finished("r", st)
+      val timing = if (!wmPastEnd) EARLY else if (!w._4) ON_TIME else LATE
+      val (pane, next) = fire(key, s, withTrig(w, st), timing, isFinal = rootDone)
+      (Some(pane),
+        if (rootDone) (next._1, fn.createAccumulator(), next._3, next._4, 0L, true, Nil) else next)
+    }
+
+    /** An open window whose trigger holds an armed processing-time deadline. */
+    private def armed(w: W): Boolean =
+      !w._6 && w._7.exists { case (_, _, f, d) => !f && d != Long.MaxValue }
+
+    /** Quiescent-key catch-up (Beam's runner-scheduled proc-time timers,
+      * RCORE/triggers/AfterProcessingTimeStateMachine.java: an idle key
+      * still wakes when its deadline passes): while an open window holds an
+      * armed proc-time deadline, keep an event-time timer registered just
+      * past the current watermark and below that window's end. ANY later
+      * batch — data for other keys included — advances the watermark,
+      * fires the timer, and re-evaluates the window against the proc-time
+      * clock; if the deadline still hasn't passed, the handler
+      * re-registers. Cost: one timer wake per armed group per watermark
+      * advance, the cadence Beam's proc-time timers show under a
+      * micro-batch runner. */
+    private def armCatchup(wm: Long, ws: Iterable[W]): Unit =
+      if (ws.exists(w => armed(w) && wm + 1 < w._1)) getHandle.registerTimer(wm + 1)
+
+    override def handleInputRows(key: G, rows: Iterator[(K, Long, V)],
                                  tv: TimerValues): Iterator[Pane[K, OUT]] = {
       val wm = tv.getCurrentWatermarkInMs()
       val nowProc = tv.getCurrentProcessingTimeInMs()
       val active = collection.mutable.Map.empty[Long, W]
       windows.iterator().foreach { p => active(p._1) = p._2 }
+      val endBefore = active.map { case (s, w) => s -> w._1 }.toMap
       val touched = collection.mutable.Set.empty[Long]
+      val mergedAway = collection.mutable.Set.empty[Long]
       rows.foreach { case (_, ts, v) =>
         // WindowFn.assignWindows: the proto-window is element-driven (value
         // AND timestamp — Beam's AssignContext exposes both); Sessions is
@@ -801,7 +662,7 @@ object Triggers {
               acc = fn.mergeAccumulators(a, acc)
               paneIdx = math.max(paneIdx, pi); fired = fired || f; pending += pd
               trig = TriggerEval.merge(trig, tg)
-              active.remove(s); touched -= s
+              active.remove(s); touched -= s; mergedAway += s
             }
             val merged: W = (newEnd, acc, paneIdx, fired, pending, false, trig)
             val st = loadTrig(merged)
@@ -812,84 +673,84 @@ object Triggers {
         }
       }
       var out = List.empty[Pane[K, OUT]]
-      windows.clear()
       touched.foreach { s =>
-        val w = active(s)
         // the element-acceptance gate guarantees wm < end + lateness for
         // every touched window, so a touched window is never AT its GC
         // horizon here — the GC timer owns final flushing
-        val wmPastEnd = wm >= w._1
-        val st = loadTrig(w)
-        val ctx = TrigCtx(wmPastEnd, nowProc)
-        if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-          TriggerEval.onFire(trigger, "r", st, ctx)
-          val rootDone = TriggerEval.finished("r", st)
-          // with zero allowed lateness a post-watermark pane is also the
-          // window's last (the same-batch/next timer GCs silently)
-          val isFinal = rootDone || (wmPastEnd && allowedLatenessMs == 0)
-          val timing = if (!wmPastEnd) EARLY else if (!w._4) ON_TIME else LATE
-          val (pane, next) = fireFrom(key, s, withTrig(w, st), timing, isFinal)
-          out = pane :: out
-          if (rootDone) {
-            // early closure: tombstone until GC (see class doc)
-            active(s) = (next._1, fn.createAccumulator(), next._3, next._4,
-              0L, true, Nil)
-          } else active(s) = next
-        } else active(s) = withTrig(w, st)
-        active.get(s).foreach { w2 =>
-          getHandle.registerTimer(w2._1)
-          if (allowedLatenessMs > 0) getHandle.registerTimer(w2._1 + allowedLatenessMs)
+        val (pane, w) = evaluate(key, s, active(s), wm >= active(s)._1, nowProc)
+        pane.foreach(p => out = p :: out)
+        active(s) = w
+        windows.updateValue(s, w)
+        // a window's timers are set once, when it first holds these
+        // bounds: re-setting an end timer the watermark already passed
+        // would evaluate the window a second time in this batch
+        if (!endBefore.get(s).contains(w._1)) {
+          getHandle.registerTimer(w._1)
+          if (allowedLatenessMs > 0) getHandle.registerTimer(w._1 + allowedLatenessMs)
         }
       }
-      active.foreach { case (s, w) => windows.updateValue(s, w) }
+      (mergedAway --= touched).foreach(windows.removeKey)
+      armCatchup(wm, active.values)
       out.reverseIterator
     }
 
-    override def handleExpiredTimer(key: K, tv: TimerValues,
+    override def handleExpiredTimer(key: G, tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
       val expiry = info.getExpiryTimeInMs()
       val nowProc = tv.getCurrentProcessingTimeInMs()
       var out = List.empty[Pane[K, OUT]]
+      val open = List.newBuilder[W]
       windows.iterator().toList.foreach { case (s, w) =>
-        if (w._1 + allowedLatenessMs == expiry || (allowedLatenessMs == 0 && w._1 == expiry)) {
+        if (w._1 + allowedLatenessMs == expiry) {
           // GC horizon. Closed tombstones just evaporate; open windows
-          // flush a final pane when the trigger still wants to fire
-          // (on-time never happened), data is pending since the last
-          // firing (ClosingBehavior.FIRE_IF_NON_EMPTY), or no pane ever
-          // fired
+          // flush a final pane when the trigger still wants to fire and its
+          // on-time pane has not (e.g. orFinally's AfterWatermark
+          // until-clause when zero lateness folds end-of-window into GC),
+          // data is pending since the last firing
+          // (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105),
+          // or no pane ever fired (every window produces at least one pane)
           if (!w._6) {
-            val st = loadTrig(w)
-            val trigWants = !w._4 && TriggerEval.shouldFire(trigger, "r", st,
+            val trigWants = !w._4 && TriggerEval.shouldFire(trigger, "r", loadTrig(w),
               TrigCtx(wmPastEnd = true, nowProc))
-            if (trigWants || w._5 > 0 || w._3 == 0) {
-              val (pane, _) = fireFrom(key, s, w, if (w._4) LATE else ON_TIME, isFinal = true)
-              out = pane :: out
-            }
+            if (trigWants || w._5 > 0 || w._3 == 0)
+              out = fire(key, s, w, if (w._4) LATE else ON_TIME, isFinal = true)._1 :: out
           }
           windows.removeKey(s)
-        } else if (w._1 == expiry && !w._6) {
-          // end-of-window with allowedLateness > 0 (when lateness == 0 the
-          // GC branch above matched this same expiry): evaluate the trigger
-          // with the watermark past the end — the ON_TIME opportunity;
-          // composite roots may also finish here
-          val st = loadTrig(w)
-          val ctx = TrigCtx(wmPastEnd = true, nowProc)
-          if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-            TriggerEval.onFire(trigger, "r", st, ctx)
-            val rootDone = TriggerEval.finished("r", st)
-            val (pane, next) = fireFrom(key, s, withTrig(w, st),
-              if (w._4) LATE else ON_TIME, isFinal = rootDone)
-            out = pane :: out
-            if (rootDone)
-              windows.updateValue(s, (next._1, fn.createAccumulator(), next._3,
-                next._4, 0L, true, Nil))
-            else windows.updateValue(s, next)
-          }
-        }
-        // stale timers from merged-away windows match nothing: ignored
+        } else if (!w._6 && (expiry == w._1 || (expiry < w._1 && armed(w)))) {
+          // end of window with allowedLateness > 0 (with zero lateness the
+          // GC branch above matched this same expiry): the ON_TIME
+          // opportunity, where composite roots may also finish. Or a
+          // catch-up wake before the end, which must not report the
+          // watermark past the end — AfterWatermark children would fire
+          // early
+          val (pane, next) = evaluate(key, s, w, wmPastEnd = expiry == w._1, nowProc)
+          pane.foreach { p => out = p :: out; windows.updateValue(s, next) }
+          open += next
+        } else open += w // stale timers from merged-away windows match nothing
       }
+      armCatchup(tv.getCurrentWatermarkInMs(), open.result())
       out.reverseIterator
     }
+  }
+
+  /** [[SessionW]]'s encoder from the accumulator's, for callers that pass
+    * only `Encoder[ACC]`. */
+  private def windowStateEncoder[ACC](accEnc: Encoder[ACC]): Encoder[SessionW[ACC]] = {
+    import AgnosticEncoders._
+    val fields = Seq(PrimitiveLongEncoder, agnosticEncoderFor(accEnc), PrimitiveIntEncoder,
+      PrimitiveBooleanEncoder, PrimitiveLongEncoder, PrimitiveBooleanEncoder,
+      agnosticEncoderFor(ExpressionEncoder[List[(String, Long, Boolean, Long)]]()))
+      .zipWithIndex.map { case (e, i) => EncoderField(s"_${i + 1}", e, e.nullable, Metadata.empty) }
+    ProductEncoder(scala.reflect.classTag[SessionW[ACC]], fields, None)
+  }
+
+  private def runPanes[G: Encoder, K, V, ACC, OUT](
+      events: Dataset[(K, Long, V)], group: ((K, Long, V)) => G,
+      processor: PaneProcessor[G, K, V, ACC, OUT])(
+      implicit outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
+    Stateful.requireRocksDBStateStore(events.sparkSession)
+    events.groupByKey(group)
+      .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Session-windowed triggered aggregation with the DEFAULT trigger shape
@@ -935,27 +796,22 @@ object Triggers {
       allowedLatenessMs: Long = 0L,
       accumulating: Boolean = true)(
       implicit kEnc: Encoder[K], accEnc: Encoder[SessionW[ACC]],
-      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    Stateful.requireRocksDBStateStore(events.sparkSession)
-    events.groupByKey(_._1)
-      .transformWithState(
-        new SessionProcessor[K, V, ACC, OUT](fn, assign, allowedLatenessMs,
-          accumulating, trigger),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] =
+    runPanes(events, (r: (K, Long, V)) => r._1, new PaneProcessor[K, K, V, ACC, OUT](
+      fn, (k: K) => k, assign, allowedLatenessMs, accumulating, trigger))
 
-  /** Triggered aggregation with a composite trigger AST. */
+  /** Triggered aggregation with a composite trigger AST, on the pane
+    * processor above. `assigned` is (key, windowStartMs, value); a group is
+    * one (key, window start), so its window [start, start + windowSizeMs)
+    * never merges. */
   def triggeredAggregateComposite[K, V, ACC, OUT](
       assigned: Dataset[(K, Long, V)], fn: CombineFn[V, ACC, OUT],
       trigger: TriggerAst, windowSizeMs: Long, allowedLatenessMs: Long = 0L,
       accumulating: Boolean = true)(
       implicit kEnc: Encoder[(K, Long)], accEnc: Encoder[ACC],
-      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    Stateful.requireRocksDBStateStore(assigned.sparkSession)
-    assigned.groupByKey(r => (r._1, r._2))
-      .transformWithState(
-        new CompositeTriggerProcessor[K, V, ACC, OUT](fn, trigger, windowSizeMs,
-          allowedLatenessMs, accumulating),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] =
+    runPanes(assigned, (r: (K, Long, V)) => (r._1, r._2),
+      new PaneProcessor[(K, Long), K, V, ACC, OUT](fn, (g: (K, Long)) => g._1,
+        (ws: Long, _: V) => (ws, ws + windowSizeMs), allowedLatenessMs, accumulating,
+        trigger)(windowStateEncoder(accEnc)))
 }

@@ -403,15 +403,6 @@ class JoinsSpec extends SparkSpec {
         assert(sliced == plain, s"dir=$dir tol=$tol exact=$exact width=$w")
       }
     }
-    // the conf gate routes through the same sliced plan; sliceWidth = 0
-    // is the explicit plain-plan override even when the conf is set
-    spark.conf.set("spark.graft.asof.sliceWidth", "37")
-    try {
-      val viaConf = multiset(Joins.asOf(l, r, Seq("k"), "ts", "rts", Seq("rts", "v")))
-      val plain = multiset(Joins.asOf(l, r, Seq("k"), "ts", "rts", Seq("rts", "v"),
-        sliceWidth = 0L))
-      assert(viaConf == plain)
-    } finally spark.conf.unset("spark.graft.asof.sliceWidth")
   }
 
   test("asOf sliceWidth: NaN fractional ts stays a no-match under slicing (ANSI-safe)") {

@@ -227,6 +227,28 @@ class SessionTriggerSpec extends SparkSpec {
       (10L, 30L, Seq(1L, 20L), "ON_TIME", true)), got.toString)
   }
 
+  test("AfterProcessingTime fires for a QUIESCENT key: other keys' batches wake its session") {
+    // the catch-up timer on merging windows: key "a" arms a proc-time
+    // deadline and then gets no input; only key "z" is driven, with the
+    // watermark below a's session end [1, 602) until the last batch
+    runTriggered("sess_proctime_quiescent", gapSec = 600, latenessSec = 600,
+      Triggers.AfterWatermarkEL(Some(Triggers.AfterProcessingTimeT(250L)), None)) { (input, q) =>
+      input.addData(("a", ts(1), 1L), ("a", ts(2), 2L))
+      q.processAllAvailable() // arm deadline; not yet due -> no pane
+      Thread.sleep(400)       // let the proc-time deadline pass while "a" is idle
+      input.addData(("z", ts(30), 0L))
+      q.processAllAvailable() // z's batch advances the watermark -> catch-up wakes "a"
+      input.addData(("z", ts(700), 0L))
+      q.processAllAvailable() // watermark past a's end, before its GC -> ON_TIME
+    }
+    val panes = spark.table("sess_proctime_quiescent").collect().filter(_.getString(0) == "a")
+      .map(r => (r.getSeq[Long](3).toSeq, r.getAs[Int]("pane_index"),
+        r.getAs[String]("timing"), r.getAs[Boolean]("is_final")))
+      .sortBy(_._2).toSeq
+    assert(panes == Seq((Seq(1L, 2L), 0, "EARLY", false), (Seq(1L, 2L), 1, "ON_TIME", false)),
+      panes.toString)
+  }
+
   test("volume: 6000 events / 50 keys / 20 sessions each reconcile through the AST path") {
     // guards the merging-window + trigger-state-merge machinery under
     // volume: per key, 20 bursts of 6 events (10s spacing) separated by 1h
