@@ -37,15 +37,57 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *    says, so no catalog query depends on it.
   * A query keeps the provider it first started with: the checkpoint's
   * offset log records it and a restart reads it back from there.
+  *
+  * Buffer sizes: under G1 an object of half a heap region or more is
+  * humongous. It skips eden and holds whole regions of its own until the
+  * next young GC, and every page it touches stays resident. At small
+  * heaps Spark's defaults make two kinds of them: the 4 MiB chunks every
+  * broadcast (each stage's task binary included) is cut into, and the
+  * Tungsten pages of sorts, aggregates and joins, whose size Spark derives
+  * from the execution pool (8 MiB at a 1 GiB heap). The builder sets both `spark.broadcast.blockSize` and
+  * `spark.buffer.pageSize` to a quarter of this JVM's region size, so
+  * both are young objects; see [[bufferSizes]] for the bounds.
   */
 object GraftSession {
 
   private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** This JVM's G1 region size in bytes, or None under any other
+    * collector. */
+  private def g1RegionBytes: Option[Long] = scala.util.Try {
+    val hs = java.lang.management.ManagementFactory.getPlatformMXBean(
+      classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    if (hs.getVMOption("UseG1GC").getValue == "true")
+      Some(hs.getVMOption("G1HeapRegionSize").getValue.toLong).filter(_ > 0)
+    else None
+  }.toOption.flatten
+
+  /** `spark.broadcast.blockSize` and `spark.buffer.pageSize` at a quarter
+    * of the G1 region size, never above Spark's own defaults: 4 MiB for the
+    * chunk, and 1 MiB, the floor of the page size Spark derives, for the
+    * page. None without G1.
+    *
+    * The page size holds only while the tasks run in this JVM (a local
+    * master), and only while 8192 pages cover the whole usable heap:
+    * Spark's TaskMemoryManager gives a task at most 8192 pages and a task
+    * that needs more fails rather than spills. The unified pool is
+    * (heap - 300 MiB) × `spark.memory.fraction`, so checking against
+    * heap - 300 MiB holds whatever fraction a caller sets. Otherwise Spark
+    * keeps its own page size. */
+  private[graft] def bufferSizes(master: String): Seq[(String, String)] =
+    g1RegionBytes.toSeq.flatMap { region =>
+      val size = region / 4
+      val page = math.min(size, 1L << 20)
+      val local = master == "local" || master.startsWith("local[")
+      val pageFits = 8192L * page >= Runtime.getRuntime.maxMemory - (300L << 20)
+      Seq("spark.broadcast.blockSize" -> math.min(size, 4L << 20)) ++
+        (if (local && pageFits) Seq("spark.buffer.pageSize" -> page) else Nil)
+    }.map { case (k, bytes) => k -> s"${bytes >> 10}k" }
+
   def builder(master: String = s"local[$cpus]", shufflePartitions: Int = cpus)
-      : SparkSession.Builder =
-    SparkSession.builder()
+      : SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -87,6 +129,9 @@ object GraftSession {
       // Catalyst extensions (a NO-OP unless spark.graft.* confs enable a
       // rule — see graft.plans.GraftExtensions)
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
+    bufferSizes(master).foreach { case (k, v) => b.config(k, v) }
+    b
+  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -22,7 +22,7 @@ import graft.streaming.Triggers._
   * lateness ∈ {0, 12 s} × accumulating/discarding, run through BOTH
   *
   *  - the real engine — [[Triggers.sessionAggregateTriggered]]
-  *    (SessionProcessor: RocksDB MapState, per-window trigger state,
+  *    (`Triggers.PaneProcessor`: RocksDB MapState, per-window trigger state,
   *    event-time timers, micro-batch admission), and
   *  - an independent interpreter built on the shared [[TriggerSim]] node
   *    tree extended with structural merge (`mergeFrom`), plus ~60 lines
@@ -143,6 +143,9 @@ class FuzzSessionTranscriptSpec extends SparkSpec {
       Some(w)
     }
 
+    /** Session bounds (start -> end) held before the current batch. */
+    var endBefore = Map.empty[Long, Long]
+
     def evalArrival(w: SWin): Unit = {
       val wmPast = wm >= w.end
       if (w.trig.shouldFire(wmPast)) {
@@ -153,8 +156,13 @@ class FuzzSessionTranscriptSpec extends SparkSpec {
         emit(w, timing, isFinal)
         if (done) { w.values.clear(); w.closed = true }
       }
-      timers += w.end
-      if (latenessMs > 0) timers += w.end + latenessMs
+      // a window's timers are set once, when it first holds its bounds: an
+      // element landing in an unchanged session arms nothing, or an end
+      // timer the watermark already passed would evaluate it again
+      if (!endBefore.get(w.start).contains(w.end)) {
+        timers += w.end
+        if (latenessMs > 0) timers += w.end + latenessMs
+      }
     }
 
     def fireTimers(wmNow: Long): Unit = {
@@ -191,6 +199,7 @@ class FuzzSessionTranscriptSpec extends SparkSpec {
 
     steps.foreach {
       case In(tsSec) =>
+        endBefore = wins.map(w => w.start -> w.end).toMap
         val touched = scala.collection.mutable.LinkedHashSet.empty[SWin]
         tsSec.foreach { t =>
           addElement(t * 1000).foreach { w =>
@@ -335,5 +344,20 @@ class FuzzSessionTranscriptSpec extends SparkSpec {
       s"no merged pane with full bounds+values: $got")
     // pane index continued past A's pre-merge EARLY pane (index >= 1)
     assert(got.exists(p => p._1 == 2 && p._2 == 23 && p._3 >= 1), got.toString)
+  }
+
+  test("a late element in an unchanged session sets no second end timer: " +
+      "engine == interpreter, one LATE pane") {
+    // [3, 11) fires ON_TIME when the watermark reaches 11; the late 3 then
+    // lands inside the same bounds. Setting the passed end timer again
+    // would evaluate the window twice in that batch, and
+    // Repeatedly(AfterWatermark) fires at every evaluation past the end: a
+    // second, empty LATE pane
+    val ast = RepeatedlyT(AfterWatermarkT)
+    val steps = Seq(In(Seq(3)), Wm(11), In(Seq(3)), Wm(3000))
+    val exp = interpret(ast, steps, 12000L, accumulating = false)
+    val got = engine(ast, steps, 12000L, accumulating = false, "sessfz_late_same")
+    assert(got == exp, s"engine=$got interp=$exp")
+    assert(got.count(_._4 == "LATE") == 1, got.toString)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.Triggers
 
 /** Randomized differential for the TRIGGER ENGINE's merging-session path
-  * (Triggers.sessionAggregate → SessionProcessor): the scenario and
+  * (Triggers.sessionAggregate → Triggers.PaneProcessor): the scenario and
   * transcript suites pin hand-picked shapes, but the pane processor is
   * the most intricate custom state machine in the tree — this fuzzer
   * feeds random corpora through it and compares the final panes against

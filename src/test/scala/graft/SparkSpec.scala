@@ -73,6 +73,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** This JVM's G1 region size in bytes, read straight from HotSpot; 0
+    * under any other collector. */
+  def g1RegionBytes: Long = java.lang.management.ManagementFactory.getPlatformMXBean(
+    classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    .getVMOption("G1HeapRegionSize").getValue.toLong
+
   lazy val session: SparkSession = {
     // local[4, 2]: 4 threads, task maxFailures = 2 — a task that throws
     // retries once before failing the job. Inert for every suite except

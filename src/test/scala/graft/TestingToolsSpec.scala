@@ -177,5 +177,24 @@ class TestingToolsSpec extends SparkSpec {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName)
     for ((k, v) <- expected) assert(conf.getOption(k).contains(v), k)
+    // the buffer sizes derived from this JVM's G1 region: at most a quarter
+    // of it, so no broadcast chunk or Tungsten page is humongous, and 8192
+    // pages (a task's page table) cover the whole execution pool. Up to an
+    // 8 GiB heap, the suites' default, both are set
+    val region = SparkSpec.g1RegionBytes
+    val sizes = Seq("spark.broadcast.blockSize", "spark.buffer.pageSize")
+    val heap = Runtime.getRuntime.maxMemory
+    if (region == 0) for (k <- sizes) assert(!conf.contains(k), k)
+    else {
+      assert(conf.contains(sizes.head))
+      if (heap <= (8L << 30)) assert(conf.contains(sizes(1)))
+      for (k <- sizes if conf.contains(k)) assert(conf.getSizeAsBytes(k) <= region / 4, k)
+      val pool = (heap - (300L << 20)) * conf.getDouble("spark.memory.fraction", 0.6)
+      for (_ <- conf.getOption(sizes(1)))
+        assert(8192L * conf.getSizeAsBytes(sizes(1)) >= pool)
+      // on a cluster the executors' heaps are not this JVM's: no page size
+      assert(GraftSession.bufferSizes("spark://host:7077").map(_._1) ==
+        Seq("spark.broadcast.blockSize"))
+    }
   }
 }
