@@ -41,12 +41,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Buffer sizes: under G1 an object of half a heap region or more is
   * humongous. It skips eden and holds whole regions of its own until the
   * next young GC, and every page it touches stays resident. At small
-  * heaps Spark's defaults make two kinds of them: the 4 MiB chunks every
-  * broadcast (each stage's task binary included) is cut into, and the
-  * Tungsten pages of sorts, aggregates and joins, whose size Spark derives
-  * from the execution pool (8 MiB at a 1 GiB heap). The builder sets both `spark.broadcast.blockSize` and
-  * `spark.buffer.pageSize` to a quarter of this JVM's region size, so
-  * both are young objects; see [[bufferSizes]] for the bounds.
+  * heaps the defaults of Spark and parquet make several kinds of them:
+  * the 4 MiB chunks every broadcast (each stage's task binary included)
+  * is cut into; the Tungsten pages of sorts, aggregates and joins, whose
+  * size Spark derives from the execution pool (8 MiB at a 1 GiB heap);
+  * the parquet writer's 1 MiB page compressor; parquet's vectored reads,
+  * one buffer per run of column chunks; and HashAggregate's fast map,
+  * whose two arrays are 512 KiB each. The builder sizes each of them at a
+  * quarter of this JVM's region, so all are young objects; see
+  * [[bufferSizes]] for the bounds.
   */
 object GraftSession {
 
@@ -63,27 +66,47 @@ object GraftSession {
     else None
   }.toOption.flatten
 
-  /** `spark.broadcast.blockSize` and `spark.buffer.pageSize` at a quarter
-    * of the G1 region size, never above Spark's own defaults: 4 MiB for the
-    * chunk, and 1 MiB, the floor of the page size Spark derives, for the
-    * page. None without G1.
-    *
-    * The page size holds only while the tasks run in this JVM (a local
-    * master), and only while 8192 pages cover the whole usable heap:
-    * Spark's TaskMemoryManager gives a task at most 8192 pages and a task
-    * that needs more fails rather than spills. The unified pool is
-    * (heap - 300 MiB) × `spark.memory.fraction`, so checking against
-    * heap - 300 MiB holds whatever fraction a caller sets. Otherwise Spark
-    * keeps its own page size. */
-  private[graft] def bufferSizes(master: String): Seq[(String, String)] =
-    g1RegionBytes.toSeq.flatMap { region =>
-      val size = region / 4
-      val page = math.min(size, 1L << 20)
-      val local = master == "local" || master.startsWith("local[")
-      val pageFits = 8192L * page >= Runtime.getRuntime.maxMemory - (300L << 20)
-      Seq("spark.broadcast.blockSize" -> math.min(size, 4L << 20)) ++
-        (if (local && pageFits) Seq("spark.buffer.pageSize" -> page) else Nil)
-    }.map { case (k, bytes) => k -> s"${bytes >> 10}k" }
+  /** The buffer families sized from the G1 region, one row each: the
+    * library's own default size, whether only a local master's tasks
+    * allocate it in this JVM, and the confs that set a size in bytes.
+    * Spark's byte confs read a bare number in their own unit, so they get a
+    * `k` suffix; parquet reads `Configuration.getInt`, so plain bytes. */
+  private def bufferFamilies(heap: Long): Seq[(Long, Boolean, Long => Seq[(String, String)])] = Seq(
+    // the chunks every broadcast, each stage's task binary included, is cut into
+    (4L << 20, false, b => Seq("spark.broadcast.blockSize" -> s"${b >> 10}k")),
+    // the Tungsten page of sorts, aggregates and joins, capped at 1 MiB, the
+    // floor of the size Spark derives from the pool; a task holds at most
+    // 8192 pages and fails rather than spills past them, so only while
+    // 8192 pages cover heap - 300 MiB, which bounds the unified pool
+    // whatever `spark.memory.fraction` is
+    (1L << 20, true, b =>
+      if (8192L * b >= heap - (300L << 20)) Seq("spark.buffer.pageSize" -> s"${b >> 10}k") else Nil),
+    // the parquet writer's page, which is also its compressor's buffer
+    (1L << 20, true, b => Seq("spark.hadoop.parquet.page.size" -> b.toString)),
+    // parquet column-chunk reads: a vectored read allocates one buffer per
+    // run of consecutive chunks, however long; the plain read cuts each run
+    // into pieces of the allocation size
+    (8L << 20, true, b => Seq("spark.hadoop.parquet.hadoop.vectored.io.enabled" -> "false",
+      "spark.hadoop.parquet.read.allocation.size" -> b.toString)),
+    // HashAggregate's first-level fast map: `int[2 << bit]` buckets and a
+    // `long[1 << bit]` key-offset array, 8 << bit bytes each
+    (8L << 16, true, b => Seq("spark.sql.codegen.aggregate.fastHashMap.capacityBit" ->
+      (63 - java.lang.Long.numberOfLeadingZeros(b / 8)).toString)))
+
+  /** The [[bufferFamilies]] confs at a quarter of the G1 region, never
+    * above each family's default; none without G1 (`g1Region` None). A
+    * family that only a local master's tasks allocate is left to Spark and
+    * parquet on any other master, since the executors' regions are not
+    * this JVM's. The builder passes this JVM's region and max heap. */
+  private[graft] def bufferSizes(master: String, g1Region: Option[Long], heap: Long)
+      : Seq[(String, String)] = {
+    val local = master == "local" || master.startsWith("local[")
+    for {
+      region <- g1Region.toSeq
+      (default, localOnly, confs) <- bufferFamilies(heap) if local || !localOnly
+      kv <- confs(math.min(region / 4, default))
+    } yield kv
+  }
 
   def builder(master: String = s"local[$cpus]", shufflePartitions: Int = cpus)
       : SparkSession.Builder = {
@@ -129,7 +152,8 @@ object GraftSession {
       // Catalyst extensions (a NO-OP unless spark.graft.* confs enable a
       // rule — see graft.plans.GraftExtensions)
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
-    bufferSizes(master).foreach { case (k, v) => b.config(k, v) }
+    bufferSizes(master, g1RegionBytes, Runtime.getRuntime.maxMemory)
+      .foreach { case (k, v) => b.config(k, v) }
     b
   }
 

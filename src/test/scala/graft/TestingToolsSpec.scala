@@ -177,24 +177,45 @@ class TestingToolsSpec extends SparkSpec {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName)
     for ((k, v) <- expected) assert(conf.getOption(k).contains(v), k)
-    // the buffer sizes derived from this JVM's G1 region: at most a quarter
-    // of it, so no broadcast chunk or Tungsten page is humongous, and 8192
-    // pages (a task's page table) cover the whole execution pool. Up to an
-    // 8 GiB heap, the suites' default, both are set
-    val region = SparkSpec.g1RegionBytes
-    val sizes = Seq("spark.broadcast.blockSize", "spark.buffer.pageSize")
+    // the buffer sizes the builder derived from this JVM's G1 region and
+    // heap, and 8192 pages (a task's page table) cover the execution pool
+    val region = Some(SparkSpec.g1RegionBytes).filter(_ > 0)
     val heap = Runtime.getRuntime.maxMemory
-    if (region == 0) for (k <- sizes) assert(!conf.contains(k), k)
-    else {
-      assert(conf.contains(sizes.head))
-      if (heap <= (8L << 30)) assert(conf.contains(sizes(1)))
-      for (k <- sizes if conf.contains(k)) assert(conf.getSizeAsBytes(k) <= region / 4, k)
-      val pool = (heap - (300L << 20)) * conf.getDouble("spark.memory.fraction", 0.6)
-      for (_ <- conf.getOption(sizes(1)))
-        assert(8192L * conf.getSizeAsBytes(sizes(1)) >= pool)
-      // on a cluster the executors' heaps are not this JVM's: no page size
-      assert(GraftSession.bufferSizes("spark://host:7077").map(_._1) ==
-        Seq("spark.broadcast.blockSize"))
-    }
+    val derived = GraftSession.bufferSizes("local[4, 2]", region, heap)
+    assert(derived.nonEmpty == region.nonEmpty)
+    for ((k, v) <- derived) assert(conf.getOption(k).contains(v), k)
+    val pool = (heap - (300L << 20)) * conf.getDouble("spark.memory.fraction", 0.6)
+    for (_ <- conf.getOption("spark.buffer.pageSize"))
+      assert(8192L * conf.getSizeAsBytes("spark.buffer.pageSize") >= pool)
+
+    // the benchmark's 1 GiB heap (1 MiB regions): every buffer at 256 KiB,
+    // a quarter region; the fast map's two arrays are 8 << 15 bytes
+    val MiB = 1L << 20
+    assert(GraftSession.bufferSizes("local[4]", Some(MiB), 1L << 30).toMap == Map(
+      "spark.broadcast.blockSize" -> "256k",
+      "spark.buffer.pageSize" -> "256k",
+      "spark.hadoop.parquet.page.size" -> "262144",
+      "spark.hadoop.parquet.hadoop.vectored.io.enabled" -> "false",
+      "spark.hadoop.parquet.read.allocation.size" -> "262144",
+      "spark.sql.codegen.aggregate.fastHashMap.capacityBit" -> "15"))
+    // 4 MiB regions (a 7 GiB heap): a quarter region is 1 MiB, and nothing
+    // goes above the libraries' defaults (1 MiB parquet page, 8 MiB read
+    // allocation, capacity bit 16)
+    assert(GraftSession.bufferSizes("local", Some(4 * MiB), 7L << 30).toMap == Map(
+      "spark.broadcast.blockSize" -> "1024k",
+      "spark.buffer.pageSize" -> "1024k",
+      "spark.hadoop.parquet.page.size" -> "1048576",
+      "spark.hadoop.parquet.hadoop.vectored.io.enabled" -> "false",
+      "spark.hadoop.parquet.read.allocation.size" -> "1048576",
+      "spark.sql.codegen.aggregate.fastHashMap.capacityBit" -> "16"))
+    // a heap that 8192 one-MiB pages do not cover keeps Spark's page size
+    assert(!GraftSession.bufferSizes("local", Some(8 * MiB), 16L << 30)
+      .exists(_._1 == "spark.buffer.pageSize"))
+    // on a cluster the executors' regions are not this JVM's: only the
+    // driver-made broadcast chunk is sized
+    assert(GraftSession.bufferSizes("spark://host:7077", Some(MiB), 1L << 30) ==
+      Seq("spark.broadcast.blockSize" -> "256k"))
+    // without G1 nothing is set
+    assert(GraftSession.bufferSizes("local[4]", None, 1L << 30).isEmpty)
   }
 }

@@ -12,6 +12,7 @@ frames skipped), largest group first, as MB and count.
 """
 import collections
 import json
+import signal
 import subprocess
 import sys
 
@@ -52,4 +53,6 @@ def main():
 
 
 if __name__ == "__main__":
+    # die quietly, as other filters do, when a reader such as `head` exits
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     main()
