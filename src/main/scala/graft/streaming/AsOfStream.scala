@@ -5,56 +5,85 @@ import org.apache.spark.sql.streaming._
 
 /** Streaming event-time as-of join — the unbounded counterpart of
   * `graft.operators.Joins.asOf` (kdb `aj` / Flink temporal join): for each
-  * left event, the LATEST right event with `right.ts <= left.ts` on the same
-  * key, emitted once the watermark guarantees the answer is final.
+  * left event, the matching right event on the same key — the latest at or
+  * before it (backward), the earliest at or after it within a tolerance
+  * (forward), or the closer of the two (nearest) — emitted once, when the
+  * watermark proves the answer final.
   *
   * Not expressible with Spark's built-in stream-stream joins: their interval
   * join emits EVERY right row in a time range, not the latest-before, and a
   * last-value aggregation over it would re-open the result per trigger.
-  * Implemented on `transformWithState` with the engine's own state+timer
-  * surface (Stateful.statefulParDo's machinery):
+  * The three directions are one `transformWithState` processor
+  * ([[AsOfProcessor]]) with two switches, `lookBack` and `lookFwd`. Per key
+  * it keeps the pending lefts in a list and the rights in a map keyed by
+  * their ts. Every call — input rows or an expired timer — first folds the
+  * call's rows into state, then resolves every final left against the
+  * ts-sorted right history, then collects garbage:
   *
-  *  - left rows buffer per key until `watermark >= ts` (an event-time timer
-  *    at the earliest pending left ts wakes the key), then resolve against
-  *    the right history seen so far and emit exactly once;
-  *  - right rows land in a per-key map keyed by their ts;
-  *  - **state is bounded by the watermark-dominance GC**: once the
-  *    watermark passes, every right row except the LATEST one at-or-before
-  *    the watermark is unreachable (any still-unresolved left has
-  *    ts > watermark, and the dominant right shadows all older ones), so
-  *    the map holds only in-flight rights plus ONE dominant row per key —
-  *    the same retention argument as Flink's temporal-join state cleanup.
+  *  - **Candidate.** `back` is the last right with rts <= lts (rts < lts
+  *    when `allowExactMatches = false`), `fwd` the first right with
+  *    rts >= lts (rts > lts when strict). A side counts only if the
+  *    direction looks that way and the right lies within `tolMs` (backward
+  *    passes `Long.MaxValue`). The closer one wins; a tie goes to `back`
+  *    (the pandas merge_asof contract, same as the batch operator).
+  *  - **Finality.** A left is final once `watermark >= decisionTs`, with
+  *    `decisionTs = lts` when the direction only looks back, and
+  *    `lts + min(d*, tol)` (saturating) otherwise, `d*` being the
+  *    candidate's distance (infinite when there is none). Spark's late
+  *    filter admits a row in a later batch only when ts > this batch's
+  *    watermark (`WatermarkSupport`'s less-than-or-equal drop predicate;
+  *    StreamingSpec pins it with an equal-ts right in a later batch,
+  *    observed dropped). So at `watermark >= lts` every right at or before
+  *    lts has arrived or arrives in THIS batch, and this batch's rights are
+  *    in the map before any left resolves: `back` is final. Any right still
+  *    to come has rts > watermark >= lts + min(d*, tol), so its distance
+  *    exceeds both `d*` and the tolerance: `fwd` and the choice are final
+  *    too, and since watermark >= lts no equal-ts backward right (the tie
+  *    winner) can arrive after a d* = 0 forward match resolves. A left that
+  *    arrives already final resolves in the call that brought it.
+  *  - **GC.** A backward-looking direction keeps the dominant right — the
+  *    latest at or before the watermark — and drops every older one. Any
+  *    left still pending or yet to come has no right in (lts, watermark]
+  *    (that right would already have made it final), so the dominant right
+  *    is its `back`. Strict mode caps the dominant below the earliest
+  *    pending left and below the watermark: a left at exactly the
+  *    dominant's ts needs the right before it. The cap at the watermark
+  *    holds a row that Spark 4.1's admission rule never asks for (a left
+  *    at lts == watermark in a later batch is dropped); it keeps the
+  *    answer right should that rule ever change to less-than. Forward
+  *    drops every right at or before the watermark: no pending or future
+  *    left can reach back to it. Lefts resolved in the same call read the
+  *    history as it was before GC. State per key is therefore the pending
+  *    lefts (at most `tol` past their ts), the rights above the watermark
+  *    and one dominant right — the same retention argument as Flink's
+  *    temporal-join state cleanup. A key whose rights outnumber the kept
+  *    dominant and that has no pending left (so no timer of its own) gets
+  *    a `watermark + 1` timer, so a right-only key still drains.
+  *
+  * The tolerance of forward and nearest is REQUIRED: without it an
+  * unmatched left could be matched by a right arbitrarily far in the
+  * future, no watermark would prove it final, and it would buffer forever.
+  * Batch asOf has no such constraint (the data ends).
   *
   * Late data: Spark's stateful operators DROP input rows older than the
   * global (min-across-sources) watermark before they reach the processor
   * (including, before any batch has run, rows at event time <= epoch 0 —
   * the initial watermark is 0 and the late filter drops ts <= wm; this
-  * is Spark-wide behavior for every watermarked operator, not specific
-  * to this join),
-  * so admission is governed entirely by the `lateness` watermark delay —
-  * and because the dominance GC is keyed to the SAME global watermark,
-  * every row that is admitted always finds its complete right history
-  * still retained (an admitted left has ts >= watermark; its answer is
-  * either a right > watermark, retained as in-flight, or the dominant
-  * right at-or-before the watermark, retained by definition). Results are
-  * therefore EXACT for every admitted row at any lateness setting —
-  * INCLUDING the watermark-boundary row (left.ts == watermark), by
-  * Spark's own admission rule: the late-record filter admits a row only
-  * when ts > the PREVIOUS batch's watermark (`WatermarkSupport`'s
-  * less-than-or-equal drop predicate — StreamingSpec pins this with an
-  * equal-ts right in a later batch, observed dropped). So when the
-  * eviction watermark reaches a left's ts, every right at-or-before that
-  * ts has either already arrived or arrives in THIS batch — and
-  * same-batch rights are folded into the history before any left
-  * resolves (input rows are fully consumed, then lefts resolve, then
-  * timers run). An equal-ts right in a LATER batch would need
-  * ts > watermark >= left.ts — impossible. Emitted results are never
-  * retracted (append mode — Beam's accumulating-with-retractions is
-  * likewise out of scope there).
+  * is Spark-wide behavior for every watermarked operator), so admission is
+  * governed entirely by the `lateness` watermark delay, and because the GC
+  * is keyed to the SAME global watermark, every admitted row finds the
+  * right history it needs still retained. Results are therefore EXACT for
+  * every admitted row at any lateness setting. Emitted results are never
+  * retracted (append mode).
   *
   * Ties: several right rows at the same (key, ts) keep the LAST processed
   * (map overwrite) — pre-aggregate the right stream per (key, ts) for full
   * determinism, mirroring the batch asOf contract.
+  *
+  * State variable names are per direction (`pending_left`/`rights`,
+  * `pending_left_fwd`/`rights_fwd`, `pending_left_near`/`rights_near`):
+  * checkpoints written by earlier builds recorded them, and Spark 4.1.2
+  * does not notice a renamed one on restart — it would start empty.
   */
 object AsOfStream {
 
@@ -65,124 +94,24 @@ object AsOfStream {
   /** Tagged union element (side 0 = right, 1 = left). */
   type Tagged[K, L, R] = (K, java.sql.Timestamp, Int, Option[L], Option[R])
 
-  private class AsOfProcessor[K, L, R](
-      implicit bufEnc: Encoder[(Long, L)], rEnc: Encoder[R])
-      extends StatefulProcessor[K, Tagged[K, L, R], AsOfJoined[K, L, R]] {
-
-    @transient private var pendingLeft: ListState[(Long, L)] = _
-    @transient private var rights: MapState[Long, R] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      pendingLeft = getHandle.getListState[(Long, L)]("pending_left", bufEnc, TTLConfig.NONE)
-      rights = getHandle.getMapState[Long, R]("rights", Encoders.scalaLong, rEnc, TTLConfig.NONE)
-    }
-
-    /** Greatest right ts <= lts in the sorted history, as an AsOfJoined. */
-    private def resolve(key: K, lts: Long, l: L,
-                        hist: Array[(Long, R)]): AsOfJoined[K, L, R] = {
-      var lo = 0; var hi = hist.length - 1; var best = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        if (hist(mid)._1 <= lts) { best = mid; lo = mid + 1 } else hi = mid - 1
-      }
-      if (best < 0) AsOfJoined(key, lts, l, None, None)
-      else AsOfJoined(key, lts, l, Some(hist(best)._1), Some(hist(best)._2))
-    }
-
-    private def sortedHistory(): Array[(Long, R)] =
-      rights.iterator().map(p => (p._1, p._2)).toArray.sortBy(_._1)
-
-    override def handleInputRows(key: K, rows: Iterator[Tagged[K, L, R]],
-                                 tv: TimerValues): Iterator[AsOfJoined[K, L, R]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      var lateLeft = List.empty[(Long, L)]
-      var minPending = Long.MaxValue
-      var sawRight = false
-      rows.foreach {
-        case (_, ts, 0, _, Some(r)) =>
-          rights.updateValue(ts.getTime, r)
-          sawRight = true
-        case (_, ts, 1, Some(l), _) =>
-          val t = ts.getTime
-          // at-or-below the EVICTION watermark: final. Any later batch
-          // admits only ts > (this batch's) watermark >= t, and rights
-          // from THIS batch are already in the map by resolve time (rows
-          // are fully consumed before lateLeft resolves below) — so the
-          // right history at-or-before t is complete. Emit now.
-          if (t <= wm) lateLeft ::= (t, l)
-          else { pendingLeft.appendValue((t, l)); minPending = math.min(minPending, t) }
-        case _ => () // malformed tag: drop
-      }
-      if (minPending != Long.MaxValue) getHandle.registerTimer(minPending)
-      // a right-only key must still get its dominance GC: without this, a
-      // key that receives rights but never a left would accumulate history
-      // forever (no left ⇒ no timer ⇒ handleExpiredTimer never runs). The
-      // wm+1 timer fires on the next watermark advance and GC runs there.
-      else if (sawRight) getHandle.registerTimer(wm + 1)
-      if (lateLeft.isEmpty) Iterator.empty
-      else {
-        val hist = sortedHistory()
-        lateLeft.sortBy(_._1).iterator.map { case (t, l) => resolve(key, t, l, hist) }
-      }
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[AsOfJoined[K, L, R]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      // ripe at ts <= wm: later batches admit only ts > wm, and this
-      // batch's rights were folded into the map before timers run — the
-      // right history at-or-before every ripe left is complete (the same
-      // boundary argument as the arrival path).
-      val (ripe, still) = pendingLeft.get().toList.partition(_._1 <= wm)
-      pendingLeft.clear()
-      still.foreach(pendingLeft.appendValue)
-      if (still.nonEmpty) getHandle.registerTimer(still.map(_._1).min)
-      val hist = sortedHistory()
-      // dominance GC: drop every right strictly older than the latest one
-      // at-or-before the watermark. Complete for every admissible left:
-      // Spark's late-record filtering guarantees future lefts have
-      // ts >= watermark, and their answer is either an in-flight right
-      // (> watermark, retained) or the dominant right (retained).
-      val dominantIdx = hist.lastIndexWhere(_._1 <= wm)
-      if (dominantIdx > 0)
-        hist.take(dominantIdx).foreach { case (ts, _) => rights.removeKey(ts) }
-      // rights still in flight (> wm) need a future GC pass even if no
-      // left ever arrives for this key again
-      if (hist.length - math.max(dominantIdx, 0) > 1) getHandle.registerTimer(wm + 1)
-      ripe.sortBy(_._1).iterator.map { case (t, l) => resolve(key, t, l, hist) }
-    }
+  /** |a − b|, saturating at `Long.MaxValue`: ts domains straddling the Long
+    * edges (sentinel values) read as "infinitely far", never wrap negative
+    * — the same guarantee the batch asOf's distance arithmetic makes. */
+  private def dist(a: Long, b: Long): Long = {
+    val d = if (a >= b) a - b else b - a
+    if (d < 0) Long.MaxValue else d
   }
 
-  /** Forward counterpart of [[AsOfProcessor]]: for each left event, the
-    * EARLIEST right with `rts >= lts` within `lts + tolMs` — the mirrored
-    * buffer, with the roles of finality inverted:
-    *
-    *  - a pending left's best-so-far candidate `c` (min rts in
-    *    [lts, lts+tol]) is FINAL once `c.rts <= watermark` — any
-    *    later-admitted right has rts > watermark >= c.rts and cannot beat
-    *    it;
-    *  - a candidate-less left is FINAL-unmatched once
-    *    `lts + tol <= watermark` — a future right (rts > watermark) lands
-    *    outside its window;
-    *  - GC needs NO dominant row (unlike backward): once the watermark
-    *    passes, rights at-or-before it serve nobody — a future left has
-    *    lts > watermark and looks only forward — so the whole
-    *    at-or-before-watermark history drops. State is pending lefts
-    *    (≤ tol past their ts) + in-flight rights (> watermark): bounded.
-    *
-    * The tolerance is REQUIRED, not optional, and that is the narrowing:
-    * an UNBOUNDED forward as-of is not watermark-finalizable — a
-    * candidate-less left can be matched by a right arbitrarily far in the
-    * future, so no watermark ever proves "unmatched", and every
-    * unmatched left would buffer forever. Batch asOf has no such
-    * constraint (the data ends); the streaming form makes the bound
-    * explicit instead of leaking unbounded state.
-    *
-    * Late-left completeness mirrors the backward argument, simpler: an
-    * admitted left has lts > previous-batch watermark, and every right
-    * GC'd in earlier batches had rts <= that watermark < lts — below the
-    * left's window, never needed. */
-  private class AsOfForwardProcessor[K, L, R](tolMs: Long)(
+  /** a + b for b >= 0, saturating at `Long.MaxValue`. */
+  private def satAdd(a: Long, b: Long): Long = {
+    val s = a + b; if (s < a) Long.MaxValue else s
+  }
+
+  /** The as-of state machine for all three directions (see the object
+    * doc). `names` are the (pending lefts, rights) state variable names. */
+  private class AsOfProcessor[K, L, R](lookBack: Boolean, lookFwd: Boolean,
+                                       tolMs: Long, allowExact: Boolean,
+                                       names: (String, String))(
       implicit bufEnc: Encoder[(Long, L)], rEnc: Encoder[R])
       extends StatefulProcessor[K, Tagged[K, L, R], AsOfJoined[K, L, R]] {
 
@@ -190,228 +119,99 @@ object AsOfStream {
     @transient private var rights: MapState[Long, R] = _
 
     override def init(om: OutputMode, tm: TimeMode): Unit = {
-      pendingLeft = getHandle.getListState[(Long, L)]("pending_left_fwd", bufEnc, TTLConfig.NONE)
-      rights = getHandle.getMapState[Long, R]("rights_fwd", Encoders.scalaLong, rEnc, TTLConfig.NONE)
+      pendingLeft = getHandle.getListState[(Long, L)](names._1, bufEnc, TTLConfig.NONE)
+      rights = getHandle.getMapState[Long, R](names._2, Encoders.scalaLong, rEnc, TTLConfig.NONE)
     }
 
-    private def sortedHistory(): Array[(Long, R)] =
-      rights.iterator().map(p => (p._1, p._2)).toArray.sortBy(_._1)
-
-    /** Saturating lts + tolMs / rts − lts: ts domains straddling the Long
-      * edges (sentinel values) must read as "window never ends" /
-      * "infinitely far", never wrap negative — the same guarantee the
-      * batch asOf's distance arithmetic makes. */
-    private def windowEnd(lts: Long): Long = {
-      val e = lts + tolMs; if (e < lts) Long.MaxValue else e
-    }
-    private def distSat(rts: Long, lts: Long): Long = {
-      val d = rts - lts; if (rts >= lts && d < 0) Long.MaxValue else d
-    }
-
-    /** Smallest right ts >= lts in the sorted history, None if it falls
-      * past lts + tolMs. */
+    /** The left's match in the ts-sorted history, or None. */
     private def candidate(lts: Long, hist: Array[(Long, R)]): Option[(Long, R)] = {
-      var lo = 0; var hi = hist.length - 1; var best = -1
-      while (lo <= hi) {
+      // lo: first rts >= lts; up: first rts > lts (at most one right per ts)
+      var lo = 0; var hi = hist.length
+      while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (hist(mid)._1 >= lts) { best = mid; hi = mid - 1 } else lo = mid + 1
+        if (hist(mid)._1 < lts) lo = mid + 1 else hi = mid
       }
-      if (best < 0 || distSat(hist(best)._1, lts) > tolMs) None else Some(hist(best))
-    }
-
-    private def isFinal(lts: Long, c: Option[(Long, R)], wm: Long): Boolean =
-      c match {
-        case Some((rts, _)) => rts <= wm
-        case None => windowEnd(lts) <= wm
-      }
-
-    /** Watermark at which this left's answer could next become final
-      * (its candidate's ts, or its window end). */
-    private def decisionTs(lts: Long, c: Option[(Long, R)]): Long =
-      c.map(_._1).getOrElse(windowEnd(lts))
-
-    private def emitReady(key: K, wm: Long): Iterator[AsOfJoined[K, L, R]] = {
-      val hist = sortedHistory()
-      val all = pendingLeft.get().toList
-      val (ripe, still) = all.partition { case (t, _) =>
-        isFinal(t, candidate(t, hist), wm) }
-      pendingLeft.clear()
-      still.foreach(pendingLeft.appendValue)
-      if (still.nonEmpty)
-        getHandle.registerTimer(still.map { case (t, _) =>
-          decisionTs(t, candidate(t, hist)) }.min)
-      // forward GC: everything at-or-before the watermark serves nobody
-      val stale = hist.takeWhile(_._1 <= wm)
-      stale.foreach { case (ts, _) => rights.removeKey(ts) }
-      if (hist.length > stale.length && still.isEmpty)
-        getHandle.registerTimer(wm + 1) // in-flight rights need a future GC
-      ripe.sortBy(_._1).iterator.map { case (t, l) =>
-        candidate(t, hist) match {
-          case Some((rts, r)) => AsOfJoined(key, t, l, Some(rts), Some(r))
-          case None => AsOfJoined(key, t, l, None, None)
-        }
+      val up = if (lo < hist.length && hist(lo)._1 == lts) lo + 1 else lo
+      val (b, f) = if (allowExact) (up - 1, lo) else (lo - 1, up)
+      val back = Option.when(lookBack && b >= 0 && dist(lts, hist(b)._1) <= tolMs)(hist(b))
+      val fwd = Option.when(lookFwd && f < hist.length && dist(hist(f)._1, lts) <= tolMs)(hist(f))
+      (back, fwd) match {
+        case (Some((brts, _)), Some((frts, _))) =>
+          if (dist(lts, brts) <= dist(frts, lts)) back else fwd
+        case _ => back.orElse(fwd)
       }
     }
 
-    override def handleInputRows(key: K, rows: Iterator[Tagged[K, L, R]],
-                                 tv: TimerValues): Iterator[AsOfJoined[K, L, R]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      var sawAny = false
-      rows.foreach {
-        case (_, ts, 0, _, Some(r)) => rights.updateValue(ts.getTime, r); sawAny = true
-        case (_, ts, 1, Some(l), _) => pendingLeft.appendValue((ts.getTime, l)); sawAny = true
-        case _ => ()
+    /** Watermark at which the left's answer is final. */
+    private def decisionTs(lts: Long, hist: Array[(Long, R)]): Long =
+      if (!lookFwd) lts
+      else {
+        val dStar = candidate(lts, hist).fold(Long.MaxValue)(c => dist(c._1, lts))
+        satAdd(lts, math.min(dStar, tolMs))
       }
-      if (!sawAny) Iterator.empty
-      else emitReady(key, wm) // resolves already-final lefts (incl. late ones) now
-    }
 
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[AsOfJoined[K, L, R]] =
-      emitReady(key, tv.getCurrentWatermarkInMs())
-  }
-
-  /** NEAREST counterpart: for each left event, the right with the
-    * smallest |rts − lts| within `tolMs`, ties to the BACKWARD side (the
-    * pandas merge_asof contract, same as the batch operator). The
-    * finality argument composes the other two processors' into one clean
-    * condition — a left at t with best-so-far distance d* is FINAL once
-    * `watermark >= t + min(d*, tol)`:
-    *
-    *  - any later-admitted right has rts > watermark >= t, so its
-    *    distance exceeds watermark − t >= min(d*, tol) — it can neither
-    *    beat d* nor land inside the tolerance when none was found;
-    *  - the condition implies watermark >= t, so a late equal-ts BACKWARD
-    *    right (which would win a tie against a forward match) can no
-    *    longer be admitted when a d* = 0 match resolves;
-    *  - tolerance REQUIRED, same narrowing as forward: without it an
-    *    unmatched left is never watermark-final.
-    *
-    * GC is backward's dominance rule (a future left may still look BACK
-    * at the latest right at-or-before the watermark; older rights are
-    * shadowed for every admissible lts > watermark), so quiescent state
-    * is one dominant right per key plus in-flight rows. */
-  private class AsOfNearestProcessor[K, L, R](tolMs: Long, allowExact: Boolean)(
-      implicit bufEnc: Encoder[(Long, L)], rEnc: Encoder[R])
-      extends StatefulProcessor[K, Tagged[K, L, R], AsOfJoined[K, L, R]] {
-
-    @transient private var pendingLeft: ListState[(Long, L)] = _
-    @transient private var rights: MapState[Long, R] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      pendingLeft = getHandle.getListState[(Long, L)]("pending_left_near", bufEnc, TTLConfig.NONE)
-      rights = getHandle.getMapState[Long, R]("rights_near", Encoders.scalaLong, rEnc, TTLConfig.NONE)
-    }
-
-    private def sortedHistory(): Array[(Long, R)] =
-      rights.iterator().map(p => (p._1, p._2)).toArray.sortBy(_._1)
-
-    private def satAdd(a: Long, b: Long): Long = {
-      val s = a + b; if (s < a) Long.MaxValue else s
-    }
-    private def distSat(hi: Long, lo: Long): Long = {
-      val d = hi - lo; if (hi >= lo && d < 0) Long.MaxValue else d
-    }
-
-    /** Best candidate within tolMs: smaller distance wins, ties to the
-      * backward (at-or-before) side. `allowExact = false` makes both
-      * sides strict (rts < lts / rts > lts — the pandas flag); at most
-      * one right sits at exactly lts (the map is keyed by ts), so the
-      * strict forward candidate just skips that one slot. */
-    private def best(lts: Long, hist: Array[(Long, R)]): Option[(Long, R)] = {
-      // largest rts <= lts (allowExact) / rts < lts (strict)
-      var lo = 0; var hi = hist.length - 1; var back = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val before = if (allowExact) hist(mid)._1 <= lts else hist(mid)._1 < lts
-        if (before) { back = mid; lo = mid + 1 } else hi = mid - 1
+    /** Resolve every final left, then collect garbage. */
+    private def step(key: K, wm: Long): Iterator[AsOfJoined[K, L, R]] = {
+      val hist = rights.iterator().map(p => (p._1, p._2)).toArray.sortBy(_._1)
+      val (ripe, still) = pendingLeft.get().toList.partition(l => decisionTs(l._1, hist) <= wm)
+      if (ripe.nonEmpty) {
+        pendingLeft.clear()
+        still.foreach(pendingLeft.appendValue)
       }
-      var fwd = back + 1 // smallest rts > lts / >= lts (may be == length)
-      if (!allowExact && fwd < hist.length && hist(fwd)._1 == lts) fwd += 1
-      val backOk = back >= 0 && distSat(lts, hist(back)._1) <= tolMs
-      val fwdOk = fwd < hist.length && distSat(hist(fwd)._1, lts) <= tolMs
-      (backOk, fwdOk) match {
-        case (true, true) =>
-          if (distSat(lts, hist(back)._1) <= distSat(hist(fwd)._1, lts))
-            Some(hist(back)) else Some(hist(fwd))
-        case (true, false) => Some(hist(back))
-        case (false, true) => Some(hist(fwd))
-        case _ => None
-      }
-    }
-
-    /** Watermark at which the answer can no longer improve. */
-    private def decisionTs(lts: Long, c: Option[(Long, R)]): Long = {
-      val dStar = c.map { case (rts, _) =>
-        if (rts <= lts) distSat(lts, rts) else distSat(rts, lts) }
-        .getOrElse(Long.MaxValue)
-      satAdd(lts, math.min(dStar, tolMs))
-    }
-
-    private def emitReady(key: K, wm: Long): Iterator[AsOfJoined[K, L, R]] = {
-      val hist = sortedHistory()
-      val all = pendingLeft.get().toList
-      val (ripe, still) = all.partition { case (t, _) =>
-        decisionTs(t, best(t, hist)) <= wm }
-      pendingLeft.clear()
-      still.foreach(pendingLeft.appendValue)
-      if (still.nonEmpty)
-        getHandle.registerTimer(still.map { case (t, _) =>
-          decisionTs(t, best(t, hist)) }.min)
-      // dominance GC (backward's rule): future lefts may look back at the
-      // latest right at-or-before the watermark — keep it, drop older.
-      // STRICT mode adds one guard: a left at exactly the dominant's ts
-      // needs the right STRICTLY before it (the equal-ts dominant is not
-      // its candidate). Such a left may be still-pending here, so the
-      // keep-threshold also caps at the earliest pending left. It is
-      // ALSO capped at the watermark itself even with nothing pending —
-      // defense for the lts == wm boundary: under Spark 4.1's admission
-      // rule that row is never admitted in a later batch (the late filter
-      // drops ts <= the previous batch's watermark — LessThanOrEqual in
-      // WatermarkSupport.watermarkExpression, pinned by StreamingSpec and
-      // the boundary case in FuzzAsOfStreamSpec), but one extra retained
-      // row per key buys correctness that doesn't depend on that <= vs <
-      // subtlety ever changing.
+      if (still.nonEmpty) getHandle.registerTimer(still.map(l => decisionTs(l._1, hist)).min)
       val wmIdx = hist.lastIndexWhere(_._1 <= wm)
-      val dominantIdx =
+      val dominant =
         if (allowExact) wmIdx
-        else {
-          val bound =
-            if (still.isEmpty) wm else math.min(wm, still.map(_._1).min)
-          math.min(wmIdx, hist.lastIndexWhere(_._1 < bound))
-        }
-      if (dominantIdx > 0)
-        hist.take(dominantIdx).foreach { case (ts, _) => rights.removeKey(ts) }
-      if (hist.length - math.max(dominantIdx, 0) > 1 && still.isEmpty)
+        else math.min(wmIdx, hist.lastIndexWhere(_._1 < (wm +: still.map(_._1)).min))
+      val cut = if (lookBack) math.max(dominant, 0) else wmIdx + 1
+      hist.take(cut).foreach { case (ts, _) => rights.removeKey(ts) }
+      if (still.isEmpty && hist.length - cut > (if (lookBack) 1 else 0))
         getHandle.registerTimer(wm + 1)
       ripe.sortBy(_._1).iterator.map { case (t, l) =>
-        best(t, hist) match {
-          case Some((rts, r)) => AsOfJoined(key, t, l, Some(rts), Some(r))
-          case None => AsOfJoined(key, t, l, None, None)
-        }
+        val c = candidate(t, hist)
+        AsOfJoined(key, t, l, c.map(_._1), c.map(_._2))
       }
     }
 
     override def handleInputRows(key: K, rows: Iterator[Tagged[K, L, R]],
                                  tv: TimerValues): Iterator[AsOfJoined[K, L, R]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      var sawAny = false
       rows.foreach {
-        case (_, ts, 0, _, Some(r)) => rights.updateValue(ts.getTime, r); sawAny = true
-        case (_, ts, 1, Some(l), _) => pendingLeft.appendValue((ts.getTime, l)); sawAny = true
-        case _ => ()
+        case (_, ts, 0, _, Some(r)) => rights.updateValue(ts.getTime, r)
+        case (_, ts, 1, Some(l), _) => pendingLeft.appendValue((ts.getTime, l))
+        case _ => () // malformed tag: drop
       }
-      if (!sawAny) Iterator.empty else emitReady(key, wm)
+      step(key, tv.getCurrentWatermarkInMs())
     }
 
     override def handleExpiredTimer(key: K, tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[AsOfJoined[K, L, R]] =
-      emitReady(key, tv.getCurrentWatermarkInMs())
+      step(key, tv.getCurrentWatermarkInMs())
   }
 
-  /** Join two keyed, timestamped streams as-of. Each side gets
-    * `withWatermark(lateness)` before the union (Spark advances the global
-    * watermark to the union's minimum). Output rows are FINAL (append
+  /** Tag both sides, give each `withWatermark(lateness)` before the union
+    * (Spark advances the global watermark to the union's minimum) and run
+    * `processor` per key. */
+  private def join[K, L, R](left: Dataset[(K, java.sql.Timestamp, L)],
+                            right: Dataset[(K, java.sql.Timestamp, R)],
+                            lateness: String, processor: AsOfProcessor[K, L, R])(
+      implicit tagEnc: Encoder[Tagged[K, L, R]], kEnc: Encoder[K],
+      outEnc: Encoder[AsOfJoined[K, L, R]]): Dataset[AsOfJoined[K, L, R]] = {
+    Stateful.requireRocksDBStateStore(left.sparkSession)
+    val l = left.map { case (k, ts, v) =>
+      (k, ts, 1, Some(v): Option[L], None: Option[R]) }.withWatermark("_2", lateness)
+    val r = right.map { case (k, ts, v) =>
+      (k, ts, 0, None: Option[L], Some(v): Option[R]) }.withWatermark("_2", lateness)
+    l.union(r).groupByKey(_._1)
+      .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append())
+  }
+
+  private def requireTolerance(toleranceMs: Long, name: String): Unit =
+    require(toleranceMs >= 0,
+      s"$name requires a finite toleranceMs >= 0: without a bound, an " +
+        "unmatched left is never watermark-final and would buffer forever")
+
+  /** BACKWARD streaming as-of: for each left event, the LATEST right with
+    * `right.ts <= left.ts` on the same key. Output rows are FINAL (append
     * mode): a left emits when the watermark passes its ts, or immediately
     * when it arrives late.
     *
@@ -425,26 +225,15 @@ object AsOfStream {
                         lateness: String = "0 seconds")(
       implicit tagEnc: Encoder[Tagged[K, L, R]],
       kEnc: Encoder[K], bufEnc: Encoder[(Long, L)], rEnc: Encoder[R],
-      outEnc: Encoder[AsOfJoined[K, L, R]]): Dataset[AsOfJoined[K, L, R]] = {
-    Stateful.requireRocksDBStateStore(left.sparkSession)
-    val l = left.map { case (k, ts, v) =>
-      (k, ts, 1, Some(v): Option[L], None: Option[R]) }.withWatermark("_2", lateness)
-    val r = right.map { case (k, ts, v) =>
-      (k, ts, 0, None: Option[L], Some(v): Option[R]) }.withWatermark("_2", lateness)
-    l.union(r).groupByKey(_._1)
-      .transformWithState(new AsOfProcessor[K, L, R],
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[AsOfJoined[K, L, R]]): Dataset[AsOfJoined[K, L, R]] =
+    join(left, right, lateness, new AsOfProcessor[K, L, R](lookBack = true,
+      lookFwd = false, tolMs = Long.MaxValue, allowExact = true, ("pending_left", "rights")))
 
   /** FORWARD streaming as-of: for each left event, the EARLIEST right with
-    * `left.ts <= right.ts <= left.ts + toleranceMs` on the same key,
-    * emitted once the watermark proves the answer final (see
-    * [[AsOfForwardProcessor]] for the finality/GC argument). The tolerance
-    * is REQUIRED: unbounded forward is not watermark-finalizable — an
-    * unmatched left could be matched by a right arbitrarily far in the
-    * future, so it would buffer forever. State stays bounded: pending
-    * lefts live at most `toleranceMs` past their ts, rights at most until
-    * the watermark passes them. */
+    * `left.ts <= right.ts <= left.ts + toleranceMs` on the same key. The
+    * tolerance is REQUIRED (see the object doc). State stays bounded:
+    * pending lefts live at most `toleranceMs` past their ts, rights at most
+    * until the watermark passes them. */
   def asOfJoinForward[K, L, R](left: Dataset[(K, java.sql.Timestamp, L)],
                                right: Dataset[(K, java.sql.Timestamp, R)],
                                toleranceMs: Long,
@@ -452,31 +241,17 @@ object AsOfStream {
       implicit tagEnc: Encoder[Tagged[K, L, R]],
       kEnc: Encoder[K], bufEnc: Encoder[(Long, L)], rEnc: Encoder[R],
       outEnc: Encoder[AsOfJoined[K, L, R]]): Dataset[AsOfJoined[K, L, R]] = {
-    require(toleranceMs >= 0,
-      "asOfJoinForward requires a finite toleranceMs >= 0: without a " +
-        "look-ahead bound, an unmatched left is never watermark-final and " +
-        "would buffer forever")
-    Stateful.requireRocksDBStateStore(left.sparkSession)
-    val l = left.map { case (k, ts, v) =>
-      (k, ts, 1, Some(v): Option[L], None: Option[R]) }.withWatermark("_2", lateness)
-    val r = right.map { case (k, ts, v) =>
-      (k, ts, 0, None: Option[L], Some(v): Option[R]) }.withWatermark("_2", lateness)
-    l.union(r).groupByKey(_._1)
-      .transformWithState(new AsOfForwardProcessor[K, L, R](toleranceMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    requireTolerance(toleranceMs, "asOfJoinForward")
+    join(left, right, lateness, new AsOfProcessor[K, L, R](lookBack = false,
+      lookFwd = true, toleranceMs, allowExact = true, ("pending_left_fwd", "rights_fwd")))
   }
 
   /** NEAREST streaming as-of: the right with the smallest |rts − lts|
     * within `toleranceMs`, ties to backward — full direction parity with
-    * the batch `Joins.asOf`. Tolerance REQUIRED (the forward narrowing
-    * applies: without a bound an unmatched left is never
-    * watermark-final); state = pending lefts (≤ tolerance past their ts)
-    * + one dominant right per key + in-flight rights. See
-    * [[AsOfNearestProcessor]] for the single-condition finality
-    * argument. `allowExactMatches = false` makes both comparisons strict
-    * (the pandas flag, matching batch asOf) — candidate selection skips
-    * the equal-ts right and the dominance GC additionally retains the
-    * latest right strictly below the earliest pending left. */
+    * the batch `Joins.asOf`. Tolerance REQUIRED; state = pending lefts
+    * (≤ tolerance past their ts) + one dominant right per key + in-flight
+    * rights. `allowExactMatches = false` makes both comparisons strict
+    * (the pandas flag, matching batch asOf). */
   def asOfJoinNearest[K, L, R](left: Dataset[(K, java.sql.Timestamp, L)],
                                right: Dataset[(K, java.sql.Timestamp, R)],
                                toleranceMs: Long,
@@ -485,17 +260,8 @@ object AsOfStream {
       implicit tagEnc: Encoder[Tagged[K, L, R]],
       kEnc: Encoder[K], bufEnc: Encoder[(Long, L)], rEnc: Encoder[R],
       outEnc: Encoder[AsOfJoined[K, L, R]]): Dataset[AsOfJoined[K, L, R]] = {
-    require(toleranceMs >= 0,
-      "asOfJoinNearest requires a finite toleranceMs >= 0: without a " +
-        "bound, an unmatched left is never watermark-final and would " +
-        "buffer forever")
-    Stateful.requireRocksDBStateStore(left.sparkSession)
-    val l = left.map { case (k, ts, v) =>
-      (k, ts, 1, Some(v): Option[L], None: Option[R]) }.withWatermark("_2", lateness)
-    val r = right.map { case (k, ts, v) =>
-      (k, ts, 0, None: Option[L], Some(v): Option[R]) }.withWatermark("_2", lateness)
-    l.union(r).groupByKey(_._1)
-      .transformWithState(new AsOfNearestProcessor[K, L, R](toleranceMs, allowExactMatches),
-        TimeMode.EventTime(), OutputMode.Append())
+    requireTolerance(toleranceMs, "asOfJoinNearest")
+    join(left, right, lateness, new AsOfProcessor[K, L, R](lookBack = true,
+      lookFwd = true, toleranceMs, allowExactMatches, ("pending_left_near", "rights_near")))
   }
 }

@@ -30,8 +30,9 @@ import org.apache.spark.sql.streaming._
   *
   * State store: transformWithState keeps each declared state and its
   * timers in column families, which only the RocksDB provider has. Every
-  * builder that plans one (here, in `Triggers` and in `AsOfStream`) calls
-  * [[requireRocksDBStateStore]]; nothing else picks a provider, so the
+  * builder that plans one calls [[requireRocksDBStateStore]]: the ones
+  * here and in `Triggers`, and `AsOfStream`'s one private `join`, which
+  * its three as-of builders share. Nothing else picks a provider, so the
   * fixed-window pane step and Spark's own stateful operators stay on the
   * default HDFS-backed store (see `graft.GraftSession`).
   */

@@ -85,8 +85,8 @@ object StreamingOps {
     * instead.
     *
     * Key columns are deduplicated using-columns style (`coalesce(l, r)`),
-    * so outer-join outputs carry one key column. State boundedness is
-    * probed (StreamProbe) and asserted in StreamingSpec.
+    * so outer-join outputs carry one key column. StreamingSpec asserts
+    * that the join's state rows are bounded and evicted at the watermark.
     */
   def streamStreamJoin(left: DataFrame, leftTs: Column, leftDelay: String,
                        right: DataFrame, rightTs: Column, rightDelay: String,

@@ -44,6 +44,17 @@ class CheckpointRecoverySpec extends SparkSpec {
     def extractOutput(acc: Long): Long = acc
   }
 
+  /** Asserts that each of `names` reads back one row from the latest
+    * state of the checkpoint's transformWithState operator, through
+    * Spark's state data source. An undefined name fails the read with
+    * STDS_INVALID_OPTION_VALUE, so renaming a variable that checkpoints
+    * recorded, which Spark 4.1.2 would restart on empty, fails here. */
+  private def assertOneRowPerStateVar(cp: String, names: String*): Unit = {
+    val rows = names.map(n =>
+      n -> spark.read.format("statestore").option("stateVarName", n).load(cp).count())
+    assert(rows.forall(_._2 == 1L), s"state rows per variable after run 1: $rows")
+  }
+
   private def restartable(df: DataFrame, outDir: String, cp: String) =
     df.writeStream.format("parquet").option("path", outDir)
       .option("checkpointLocation", cp).outputMode("append")
@@ -381,13 +392,19 @@ class CheckpointRecoverySpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft-rec-out").toString
     def sink = spark.read.schema("k STRING, lts LONG, rts LONG").parquet(outDir)
 
-    // run 1: the left alone — no forward candidate yet, pending in state
+    // run 1: the left and a right BEFORE it, which forward never looks
+    // back to — no forward candidate yet; both live only in state. Both
+    // are added before the start so they share the first batch: a right
+    // alone in a batch sets the watermark to its own ts, and forward's GC
+    // drops it before the left arrives.
+    rightIn.addData(("k", ts(2000), 0L))
+    leftIn.addData(("k", ts(5000), "l"))
     val q1 = restartable(out, outDir, cp).start()
     try {
-      leftIn.addData(("k", ts(5000), "l"))
       q1.processAllAvailable()
       assert(sink.count() == 0, "left must still be pending at the stop")
     } finally q1.stop()
+    assertOneRowPerStateVar(cp, "pending_left_fwd", "rights_fwd")
 
     // run 2: the earliest in-window right (t=8 s ∈ [5 s, 15 s]) arrives
     // only after the restart; riders finalize it — exactly one row
@@ -427,6 +444,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       q1.processAllAvailable()
       assert(sink.count() == 0, "left must still be pending at the stop")
     } finally q1.stop()
+    assertOneRowPerStateVar(cp, "pending_left_near", "rights_near")
 
     // run 2: a CLOSER right (t=7 s, distance 2 s, forward side) arrives
     // only after the restart — it must beat the recovered backward
@@ -501,6 +519,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       q1.processAllAvailable()
       assert(sink.count() == 0, "left must still be pending at the stop point")
     } finally q1.stop()
+    assertOneRowPerStateVar(cp, "pending_left", "rights")
 
     // run 2: a LATER right r2 at t=3s arrives after the restart — still
     // ≤ the pending left's ts and closer than r1, so the recovered left

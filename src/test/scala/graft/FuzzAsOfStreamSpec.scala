@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.Joins
 import graft.streaming.{AsOfStream, Stateful}
 
-/** Streaming↔batch as-of EQUIVALENCE fuzzer: AsOfStream's processors
-  * (watermark-finality conditions, dominance GC, the forward candidate
-  * logic) are the most intricate state machines in the engine, and their
+/** Streaming↔batch as-of EQUIVALENCE fuzzer: AsOfStream's processor
+  * (one candidate search, watermark-finality rule and GC, switched per
+  * direction) is the most intricate state machine in the engine, and its
   * contract is exactly "converge to the batch asOf answer once the
   * watermark closes every row". This spec runs randomized keyed,
   * timestamped (left, right) corpora through BOTH paths and compares
@@ -32,6 +32,11 @@ import graft.streaming.{AsOfStream, Stateful}
   * sources closes every pending row. The stream's output (sentinel
   * excluded) must equal the batch result EXACTLY — per left row: the
   * matched right ts and payload, or unmatched.
+  *
+  * After the sentinel, every left has resolved and the GC has run on every
+  * key, so the operator's state rows are also checked against the GC
+  * bound: one dominant right per key for the backward-looking directions,
+  * none for forward.
   *
   * Each trial's batch reference additionally runs through the TIME-SLICED
   * batch plan (`sliceWidth` > 0, the hot-key skew mitigation) at a random
@@ -127,6 +132,15 @@ class FuzzAsOfStreamSpec extends SparkSpec {
       leftIn.addData(("zzz_sentinel", ts(sentinel), "S"))
       rightIn.addData(("zzz_sentinel", ts(sentinel), 0L))
       q.processAllAvailable()
+      // the GC bound: a backward-looking direction keeps one dominant right
+      // per key that got a right; forward keeps none. The sentinel key adds
+      // its own right and, while the watermark has not yet made it final
+      // (lateness, or no strict candidate), its left.
+      val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+      val bound = if (direction == "forward") 2L else rights.map(_._1).distinct.size + 2L
+      assert(stateRows <= bound,
+        s"$direction(exact=$allowExact, lateness=${latenessS}s): $stateRows state rows " +
+          s"after the sentinel, GC bound $bound")
       spark.table(sink).collect()
         .map(r2 => (r2.getString(0), r2.getLong(1), r2.getString(2),
           Option(r2.get(3)).map(_.asInstanceOf[Long]),
@@ -177,7 +191,7 @@ class FuzzAsOfStreamSpec extends SparkSpec {
   private def randWidthUs(rnd: scala.util.Random): Long =
     (1L + rnd.nextInt(Rounds * RoundSpanS + 60)) * 1000000L
 
-  test(s"randomized streaming asOf (backward + forward) == batch asOf (seed=$Seed)") {
+  test(s"randomized streaming asOf (backward, forward, nearest, strict nearest) == batch asOf (seed=$Seed)") {
     val rnd = new scala.util.Random(Seed)
     var anyStrictDiff = false
     var anyMatched, anyUnmatched = false

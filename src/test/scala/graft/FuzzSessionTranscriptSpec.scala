@@ -250,6 +250,10 @@ class FuzzSessionTranscriptSpec extends SparkSpec {
           input.addData(("__wm", new Timestamp(t * 1000), 0L))
           q.processAllAvailable()
       }
+      // the final Wm(3000) passes every GC horizon, and the __wm rider never
+      // reaches the operator: merging-window state drains to empty
+      val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+      assert(stateRows == 0, s"$stateRows state rows after the final watermark")
       spark.table(sink).collect().filter(_.getString(0) == "data")
         .map(r => (r.getAs[Long]("ws") / 1000, r.getAs[Long]("we") / 1000,
           r.getAs[Int]("idx"), r.getAs[String]("timing"),

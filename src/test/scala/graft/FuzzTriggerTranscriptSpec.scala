@@ -164,6 +164,10 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
           input.addData(("__wm", new Timestamp(t * 1000), 0L))
           q.processAllAvailable()
       }
+      // the final Wm(3000) passes every "data" window's GC horizon; only the
+      // unfiltered __wm rider's own last window may still hold a row
+      val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+      assert(stateRows <= 1, s"$stateRows state rows after the final watermark")
       spark.table(sink).collect().filter(_.getString(0) == "data")
         .map(r => (r.getAs[Long]("ws"), r.getAs[Int]("idx"),
           r.getAs[String]("timing"), r.getAs[Boolean]("fin"),
